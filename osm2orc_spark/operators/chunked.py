@@ -40,8 +40,8 @@ Precondition: ``key_col`` must be NON-NULL — the stitch joins match on
 the key and NULL != NULL in a join, so NULL-key rows would lose their
 carry (or the row, for inner-join stitches).  The registered window
 queries enforce this by routing NULL-key rows through the plain window
-branch in every strategy (operators/switches.py:window_strategy;
-test_hybrid_null_keys_not_dropped).
+branch in every strategy (operators/switches.py:per_key_window;
+test_window_family_null_keys_not_dropped).
 """
 
 from __future__ import annotations

@@ -221,10 +221,14 @@ def _distinct_pairs(cand: DataFrame) -> DataFrame:
     pair's duplicate match rows come from DIFFERENT join keys (different
     shingles / LSH bands), i.e. different upstream tasks — so both
     spellings shuffle ~all raw match rows once, and this one skips the
-    second full exchange of the distinct pairs.  Per-key skew bound is
-    unchanged: a hot doc_a concentrates its raw match rows (at most the
-    pair multiplicity x its distinct partners, multiplicity <= bands or
-    prefix overlaps) on the key that already owned its verify work."""
+    second full exchange of the distinct pairs.
+
+    Skew hazard: the exchange ships RAW match rows, before dedup, so a
+    hot doc_a (a boilerplate-heavy document) lands pair multiplicity x
+    distinct partners rows (multiplicity <= bands or prefix overlaps) on
+    ONE task, not just its distinct pairs.  The exchange is a fixed-N
+    repartition, which AQE cannot split.  Measuring and bounding this is
+    ROADMAP item 5."""
     return _distribute_pairs(cand).dropDuplicates(["doc_a", "doc_b"])
 
 

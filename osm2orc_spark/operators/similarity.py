@@ -420,33 +420,6 @@ def _blocked_argmin(X, cents):
     return out
 
 
-def _trunc_div(s: int, n: int) -> int:
-    """Truncate-toward-zero division matching SQL BIGINT s//n (DuckDB)
-    and s div n (Spark)."""
-    q = abs(s) // n
-    return q if s >= 0 else -q
-
-
-def _int_array_lit(vals) -> Column:
-    return F.array(*[F.lit(int(v)).cast("bigint") for v in vals])
-
-
-def _sqdist_lit(qv_col: Column, cent: list[int]) -> Column:
-    return F.aggregate(
-        F.zip_with(qv_col, _int_array_lit(cent), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
-def _argmin_cid(qv_col: Column, cents: list[list[int]]) -> Column:
-    """0-based index of the nearest centroid; array_position returns the
-    FIRST minimum, so distance ties break toward the lowest cid — the
-    same (d, cid) tie-break the SQL twin uses."""
-    d = F.array(*[_sqdist_lit(qv_col, c) for c in cents])
-    return (F.array_position(d, F.array_min(d)) - 1).cast("int")
-
-
 def _arr_sql(vals) -> str:
     """Integer array literal as SQL text — one parsed expression instead
     of 2 py4j round-trips per element (the RP-LSH lesson: hundreds of

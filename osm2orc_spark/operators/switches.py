@@ -36,8 +36,9 @@ that rewrite a directory in place must call :func:`probe_cache_clear`.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm2orc_spark.tables import load
@@ -181,8 +182,18 @@ def hot_key_list(
     probe = f"hot_keys:{table}:{key}:{threshold}"
 
     def _compute() -> tuple:
+        # NULL keys are excluded BEFORE the limit (a NULL row must not
+        # take an overflow slot): they cannot ride an `isin` predicate
+        # (NULL isin -> NULL) and the chunked primitives' stitch joins
+        # require non-null keys (NULL != NULL in a join) — the
+        # dispatcher (per_key_window) routes ALL NULL-key rows through
+        # the window branch instead, so a hot NULL key keeps the
+        # unbounded window: correct always, straggle-bounded only for
+        # real keys (a NULL-hot stream is a data-quality bug upstream
+        # of any engine strategy).
         rows = (
             load(spark, sf_dir, table)
+            .filter(F.col(key).isNotNull())
             .groupBy(key)
             .agg(F.count(F.lit(1)).alias("n"))
             .filter(F.col("n") > threshold)
@@ -190,16 +201,7 @@ def hot_key_list(
             .limit(HOT_KEY_MAX_LIST + 1)
             .collect()
         )
-        # NULL keys are excluded: they cannot ride an `isin` predicate
-        # (NULL isin -> NULL) and the chunked primitives' stitch joins
-        # require non-null keys (NULL != NULL in a join) — the
-        # registered dispatchers route ALL NULL-key rows through the
-        # window branch instead (cold_pred / the isNull split in the
-        # all-chunked branch), so a hot NULL key keeps the unbounded
-        # window: correct always, straggle-bounded only for real keys
-        # (a NULL-hot stream is a data-quality bug upstream of any
-        # engine strategy).
-        return tuple(sorted(r[key] for r in rows if r[key] is not None))
+        return tuple(sorted(r[key] for r in rows))
 
     # through cached_probe like every other probe: it is the ONE choke
     # point the switch-registry detection sweep instruments
@@ -214,14 +216,11 @@ def window_strategy(
     - ``("window", ())``  — no hot key; the r8 single-exchange plan.
     - ``("hybrid", hot)`` — 1..HOT_KEY_MAX_LIST non-null hot keys;
       split on the key set, chunked for hot / window for the rest,
-      union (exact).  Callers route NULL keys to the window branch
-      with the explicit ``cold_pred`` (``isNull() | ~isin(hot)``) —
-      plain ``~isin`` is NULL for NULL keys and would drop them from
-      both branches.
+      union (exact).
     - ``("chunked", ())`` — more hot keys than the list cap; every
-      NON-NULL key takes the bounded split-and-stitch plan and callers
-      still route NULL-key rows through the window core (the chunked
-      stitch joins require non-null keys).
+      NON-NULL key takes the bounded split-and-stitch plan.
+
+    :func:`per_key_window` applies the pick, NULL-key routing included.
     """
     hot = hot_key_list(spark, sf_dir, table, key)
     if not hot:
@@ -231,16 +230,49 @@ def window_strategy(
     return ("hybrid", hot)
 
 
-def hot_pred(key: str, hot: tuple) -> "F.Column":
+def _hot_pred(key: str, hot: tuple) -> "F.Column":
     """Scan predicate selecting the hot-key rows of a hybrid split."""
     return F.col(key).isin(*hot)
 
 
-def cold_pred(key: str, hot: tuple) -> "F.Column":
-    """Complement of :func:`hot_pred` INCLUDING NULL keys: plain
+def _cold_pred(key: str, hot: tuple) -> "F.Column":
+    """Complement of :func:`_hot_pred` INCLUDING NULL keys: plain
     ``~isin`` evaluates to NULL for a NULL key, which would silently
     drop those rows from both hybrid branches."""
     return F.col(key).isNull() | ~F.col(key).isin(*hot)
+
+
+def per_key_window(
+    spark: SparkSession,
+    sf_dir: str,
+    ev: DataFrame,
+    window_core: Callable[[DataFrame], DataFrame],
+    chunked_core: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The per-user window family's one dispatcher: run ``window_core``
+    (the single-exchange PARTITION BY user_id spelling) and/or
+    ``chunked_core`` (its split-and-stitch twin) over ``ev`` as
+    :func:`window_strategy` picks.  Both cores must be exact on any
+    key-closed slice of ``ev`` (per-key windows compute independently on
+    disjoint key sets), so each union below equals ``window_core(ev)``.
+
+    - ``"window"``: ``window_core(ev)``; the chunked core is never
+      called, so its chunk-width probe never fires.
+    - ``"hybrid"``: cold keys (NULL included) windowed, hot keys chunked.
+    - ``"chunked"``: NULL keys windowed (the chunked stitch joins need
+      non-null keys), every other key chunked.
+    """
+    key = "user_id"
+    strategy, hot = window_strategy(spark, sf_dir)
+    if strategy == "window":
+        return window_core(ev)
+    if strategy == "chunked":
+        cold_rows, hot_rows = F.col(key).isNull(), F.col(key).isNotNull()
+    else:
+        cold_rows, hot_rows = _cold_pred(key, hot), _hot_pred(key, hot)
+    return window_core(ev.filter(cold_rows)).unionByName(
+        chunked_core(ev.filter(hot_rows))
+    )
 
 
 def table_rows(spark: SparkSession, sf_dir: str, table: str) -> int:

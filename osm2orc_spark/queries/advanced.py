@@ -63,24 +63,16 @@ DEC = "decimal(18,2)"
 )
 def asof_join_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm2orc_spark.operators import switches
-
-    strategy, hot = switches.window_strategy(spark, sf_dir)
-    ev = load(spark, sf_dir, "events")
-    if strategy == "window":
-        return _asof_last_window_core(ev)
     from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
 
-    cm = switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
-    if strategy == "chunked":
-        return _asof_last_window_core(
-            ev.filter(F.col("user_id").isNull())
-        ).unionByName(
-            _asof_last_chunked_core(ev.filter(F.col("user_id").isNotNull()), cm)
-        )
-    return _asof_last_window_core(
-        ev.filter(switches.cold_pred("user_id", hot))
-    ).unionByName(
-        _asof_last_chunked_core(ev.filter(switches.hot_pred("user_id", hot)), cm)
+    return switches.per_key_window(
+        spark,
+        sf_dir,
+        load(spark, sf_dir, "events"),
+        _asof_last_window_core,
+        lambda ev: _asof_last_chunked_core(
+            ev, switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
+        ),
     )
 
 
@@ -171,24 +163,16 @@ def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this size" is weaker than bounded-by-construction for a 10^8-row
     # key; the chunked core is the proven asof machinery).
     from osm2orc_spark.operators import switches
-
-    strategy, hot = switches.window_strategy(spark, sf_dir)
-    ev = load(spark, sf_dir, "events")
-    if strategy == "window":
-        return _asof_tol_window_core(ev)
     from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
 
-    cm = switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
-    if strategy == "chunked":
-        return _asof_tol_window_core(
-            ev.filter(F.col("user_id").isNull())
-        ).unionByName(
-            _asof_tol_chunked_core(ev.filter(F.col("user_id").isNotNull()), cm)
-        )
-    return _asof_tol_window_core(
-        ev.filter(switches.cold_pred("user_id", hot))
-    ).unionByName(
-        _asof_tol_chunked_core(ev.filter(switches.hot_pred("user_id", hot)), cm)
+    return switches.per_key_window(
+        spark,
+        sf_dir,
+        load(spark, sf_dir, "events"),
+        _asof_tol_window_core,
+        lambda ev: _asof_tol_chunked_core(
+            ev, switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
+        ),
     )
 
 
@@ -234,15 +218,12 @@ def _asof_tol_window_core(ev: DataFrame) -> DataFrame:
     return _asof_tol_select(tagged, F.col("asof_pid"), F.col("asof_pts"))
 
 
-def _asof_tol_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
+def _asof_tol_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
     """Split-and-stitch twin: the carry is chunked_running_last over the
     same (ts, side, oid) order the window core scans — identical
     machinery to _asof_last_chunked_core, with the tolerance applied as
     the same post-filter."""
-    from osm2orc_spark.operators.chunked import (
-        DEFAULT_CHUNK_MS,
-        chunked_running_last,
-    )
+    from osm2orc_spark.operators.chunked import chunked_running_last
 
     tagged = _asof_tol_tagged(ev).select(
         "*",
@@ -254,7 +235,7 @@ def _asof_tol_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
         "user_id",
         ["purchase_id", "p_ts"],
         ("ts", "side", "oid"),
-        chunk_ms or DEFAULT_CHUNK_MS,
+        chunk_ms,
     )
     return _asof_tol_select(
         d, F.col("run_purchase_id"), F.col("run_p_ts")
@@ -1157,20 +1138,12 @@ def cohort_monthly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rolling_hour_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm2orc_spark.operators import switches
 
-    strategy, hot = switches.window_strategy(spark, sf_dir)
-    ev = load(spark, sf_dir, "events")
-    if strategy == "window":
-        return _rolling_hour_window_core(ev)
-    if strategy == "chunked":
-        return _rolling_hour_window_core(
-            ev.filter(F.col("user_id").isNull())
-        ).unionByName(
-            _rolling_hour_chunked_core(ev.filter(F.col("user_id").isNotNull()))
-        )
-    return _rolling_hour_window_core(
-        ev.filter(switches.cold_pred("user_id", hot))
-    ).unionByName(
-        _rolling_hour_chunked_core(ev.filter(switches.hot_pred("user_id", hot)))
+    return switches.per_key_window(
+        spark,
+        sf_dir,
+        load(spark, sf_dir, "events"),
+        _rolling_hour_window_core,
+        _rolling_hour_chunked_core,
     )
 
 
@@ -1761,26 +1734,12 @@ def order_backlog_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("month")
 
 
-def asof_join_last_purchase_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """Split-and-stitch twin of ``asof_join_last_purchase`` — since r9
-    the registered query's own hot path (per-key routing via
-    operators/switches.py): the union+window as-of's unbounded carry
-    window blew up 3.0x on the 2x10^6-row hot user (`xl_event_windows`
-    in SCALING_SKEW.jsonl); ``chunked_running_last`` computes the
-    identical carry with every window bounded (in-chunk running last +
-    nearest prior nonempty chunk carry over the bounded summary).
-    Output proven identical at sf0.01 and on the xl_hot twin."""
-    ev = load(spark, sf_dir, "events")
-    return _asof_last_chunked_core(ev, chunk_ms)
-
-
-def _asof_last_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
-    from osm2orc_spark.operators.chunked import (
-        DEFAULT_CHUNK_MS,
-        chunked_running_last,
-    )
+def _asof_last_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
+    """Split-and-stitch twin of :func:`_asof_last_window_core`:
+    ``chunked_running_last`` computes the identical carry with every
+    window bounded (in-chunk running last + nearest prior nonempty chunk
+    carry over the bounded summary)."""
+    from osm2orc_spark.operators.chunked import chunked_running_last
 
     tagged = _asof_last_tagged(ev).select(
         "*",
@@ -1792,7 +1751,7 @@ def _asof_last_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
         "user_id",
         ["purchase_id", "p_ts"],
         ("ts", "side", "oid"),
-        chunk_ms or DEFAULT_CHUNK_MS,
+        chunk_ms,
     )
     return (
         d.filter((F.col("side") == 1) & F.col("run_purchase_id").isNotNull())

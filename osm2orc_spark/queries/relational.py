@@ -495,7 +495,6 @@ def lag_type_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm2orc_spark.operators import switches
     from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS, chunked_prev
 
-    strategy, hot = switches.window_strategy(spark, sf_dir)
     ev = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
@@ -516,42 +515,7 @@ def lag_type_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             df, "user_id", ["event_type"], ("ts", "event_id"), cm
         ).select(F.col("prev_event_type").alias("prev_type"), "event_type")
 
-    if strategy == "window":
-        return _window_lag(ev)
-    if strategy == "chunked":
-        return _window_lag(ev.filter(F.col("user_id").isNull())).unionByName(
-            _chunked_lag(ev.filter(F.col("user_id").isNotNull()))
-        )
-    return _window_lag(ev.filter(switches.cold_pred("user_id", hot))).unionByName(
-        _chunked_lag(ev.filter(switches.hot_pred("user_id", hot)))
-    )
-
-
-def window_lag_transitions_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """Split-and-stitch twin of ``window_lag_transitions`` — since r9
-    the registered query's own hot path (it auto-delegates here when the
-    max-per-user-rows probe exceeds switches.HOT_KEY_ROWS; r8 verdict
-    #1): the measured 5.9x hot-user blow-up (`xl_event_windows`
-    in SCALING_SKEW.jsonl) is the unbounded per-user lag window;
-    ``chunked_prev`` computes the identical lag with every window
-    bounded (in-chunk lag + a bounded-summary carry).  Output proven
-    identical at sf0.01 and on the xl_hot twin."""
-    from osm2orc_spark.operators import switches
-    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS, chunked_prev
-
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
-    cm = chunk_ms or switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
-    d = chunked_prev(ev, "user_id", ["event_type"], ("ts", "event_id"), cm)
-    return (
-        d.filter(F.col("prev_event_type").isNotNull())
-        .groupBy(
-            F.col("prev_event_type").alias("prev_type"),
-            F.col("event_type").alias("curr_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return switches.per_key_window(spark, sf_dir, ev, _window_lag, _chunked_lag)
 
 
 # ---------------------------------------------------------------------------
@@ -784,26 +748,12 @@ def top3_items_per_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm2orc_spark.operators import switches
 
-    strategy, hot = switches.window_strategy(spark, sf_dir)
-    ev = load(spark, sf_dir, "events")
-    if strategy == "window":
-        return _sessionize_window(ev)
-    if strategy == "chunked":
-        # NULL keys stay on the window plan (chunked stitch joins need
-        # non-null keys; see switches.window_strategy).
-        return _sessionize_window(
-            ev.filter(F.col("user_id").isNull())
-        ).unionByName(
-            sessionize_events_chunked(
-                spark, sf_dir, ev=ev.filter(F.col("user_id").isNotNull())
-            )
-        )
-    return _sessionize_window(
-        ev.filter(switches.cold_pred("user_id", hot))
-    ).unionByName(
-        sessionize_events_chunked(
-            spark, sf_dir, ev=ev.filter(switches.hot_pred("user_id", hot))
-        )
+    return switches.per_key_window(
+        spark,
+        sf_dir,
+        load(spark, sf_dir, "events"),
+        _sessionize_window,
+        lambda ev: sessionize_events_chunked(spark, sf_dir, ev=ev),
     )
 
 
@@ -882,17 +832,15 @@ def sessionize_events_chunked(
     chunk at any width; a seam can only separate distinct chunk ids,
     hence distinct ms values, so ties never force a merge error.
 
-    Since r9 this is the registered query's own hot path: the registry
-    stays frozen at 162, but ``sessionize_events`` auto-delegates here
-    when the max-per-user-rows probe exceeds switches.HOT_KEY_ROWS (r8
-    verdict #1 — the dedup_components strategy-switch precedent).
+    This is the registered query's own hot path: ``sessionize_events``
+    routes hot keys here through switches.per_key_window.
     Equivalence to the unbounded spelling is asserted by
     tests/test_advanced.py::test_sessionize_chunked_* at sf0.01 + on
     adversarial synthetic seams, and on the xl_event twin by
     scripts/measure_scaling.py --skew-xl (bit-identical check recorded
     in SCALING_SKEW.jsonl).
 
-    ``ev`` overrides the events input — the hybrid strategy passes the
+    ``ev`` overrides the events input — the dispatcher passes the
     hot-key slice here (per-key independence makes the split exact).
     """
     from osm2orc_spark.operators import switches

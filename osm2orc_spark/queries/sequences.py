@@ -163,30 +163,19 @@ def ohlc_hourly_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def event_run_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm2orc_spark.operators import switches
+    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
 
-    strategy, hot = switches.window_strategy(spark, sf_dir)
-    ev = load(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    if strategy == "window":
-        core = _islands_window_core(ev)
-    else:
-        from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
-
-        cm = switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
-        if strategy == "chunked":
-            core = _islands_window_core(
-                ev.filter(F.col("user_id").isNull())
-            ).unionByName(
-                _islands_chunked_core(ev.filter(F.col("user_id").isNotNull()), cm)
-            )
-        else:
-            core = _islands_window_core(
-                ev.filter(switches.cold_pred("user_id", hot))
-            ).unionByName(
-                _islands_chunked_core(
-                    ev.filter(switches.hot_pred("user_id", hot)), cm
-                )
-            )
-    return core.orderBy("user_id", "run_start", "first_event_id")
+    return switches.per_key_window(
+        spark,
+        sf_dir,
+        load(spark, sf_dir, "events").select(
+            "user_id", "event_type", "ts", "event_id"
+        ),
+        _islands_window_core,
+        lambda ev: _islands_chunked_core(
+            ev, switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
+        ),
+    ).orderBy("user_id", "run_start", "first_event_id")
 
 
 def _islands_window_core(ev: DataFrame) -> DataFrame:
@@ -251,30 +240,17 @@ def _islands_window_core(ev: DataFrame) -> DataFrame:
 )
 def asof_join_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm2orc_spark.operators import switches
+    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
 
-    strategy, hot = switches.window_strategy(spark, sf_dir)
-    ev = load(spark, sf_dir, "events")
-    if strategy == "window":
-        core = _asof_next_window_core(ev)
-    else:
-        from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
-
-        cm = switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
-        if strategy == "chunked":
-            core = _asof_next_window_core(
-                ev.filter(F.col("user_id").isNull())
-            ).unionByName(
-                _asof_next_chunked_core(ev.filter(F.col("user_id").isNotNull()), cm)
-            )
-        else:
-            core = _asof_next_window_core(
-                ev.filter(switches.cold_pred("user_id", hot))
-            ).unionByName(
-                _asof_next_chunked_core(
-                    ev.filter(switches.hot_pred("user_id", hot)), cm
-                )
-            )
-    return core.orderBy("purchase_id")
+    return switches.per_key_window(
+        spark,
+        sf_dir,
+        load(spark, sf_dir, "events"),
+        _asof_next_window_core,
+        lambda ev: _asof_next_chunked_core(
+            ev, switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
+        ),
+    ).orderBy("purchase_id")
 
 
 def _asof_next_tagged(ev: DataFrame) -> DataFrame:
@@ -627,24 +603,16 @@ def weekly_activity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scd2_user_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm2orc_spark.operators import switches
-
-    strategy, hot = switches.window_strategy(spark, sf_dir)
-    ev = _scd2_banded(load(spark, sf_dir, "events"))
-    if strategy == "window":
-        return _scd2_window_core(ev)
     from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
 
-    cm = switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
-    if strategy == "chunked":
-        return _scd2_window_core(
-            ev.filter(F.col("user_id").isNull())
-        ).unionByName(
-            _scd2_chunked_core(ev.filter(F.col("user_id").isNotNull()), cm)
-        )
-    return _scd2_window_core(
-        ev.filter(switches.cold_pred("user_id", hot))
-    ).unionByName(
-        _scd2_chunked_core(ev.filter(switches.hot_pred("user_id", hot)), cm)
+    return switches.per_key_window(
+        spark,
+        sf_dir,
+        _scd2_banded(load(spark, sf_dir, "events")),
+        _scd2_window_core,
+        lambda ev: _scd2_chunked_core(
+            ev, switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
+        ),
     )
 
 
@@ -691,53 +659,13 @@ def _scd2_window_core(ev: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Split-and-stitch twins of the per-user window family (late r8, NOT
-# registered — frozen registry; sessionize_events_chunked precedent).
-# The xl_event_windows sweep measured the whole family blowing up 3-6x
-# on a 2x10^6-row hot user (one unsplittable PARTITION BY user_id
-# WindowExec task); the operators/chunked.py primitives compute the
-# identical results with every window bounded.  Identity is
-# test-asserted at sf0.01 and on the xl_hot twin.
+# Split-and-stitch cores of the per-user window family: the
+# operators/chunked.py primitives compute the window cores' results with
+# every window bounded (the xl_event_windows sweep measured the window
+# spellings 3-6x slower on a 2x10^6-row hot user).  The registered
+# queries reach them through switches.per_key_window.
 # ---------------------------------------------------------------------------
-def event_transitions_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """Split-and-stitch twin of ``event_transitions`` (r9: the
-    registered query's hot path — same unbounded per-user lag shape as
-    ``window_lag_transitions``, so the same chunked_prev cure; output
-    identical because the lag is, and the downstream (from, to) count
-    is key-order-free)."""
-    from osm2orc_spark.operators import switches
-    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS, chunked_prev
-
-    ev = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
-    cm = chunk_ms or switches.burst_chunk_ms(spark, sf_dir, DEFAULT_CHUNK_MS)
-    d = chunked_prev(ev, "user_id", ["event_type"], ("ts", "event_id"), cm)
-    return (
-        d.filter(F.col("prev_event_type").isNotNull())
-        .groupBy(
-            F.col("prev_event_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "from_type", "to_type")
-    )
-
-
-def event_run_islands_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """Islands via change-flag + chunked running sum: the rn-diff island
-    key of the registered spelling is replaced by run_id =
-    running_sum(type != prev_type), which induces the SAME grouping —
-    the output never exposes the key, only per-run aggregates."""
-    ev = load(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    return _islands_chunked_core(ev, chunk_ms).orderBy(
-        "user_id", "run_start", "first_event_id"
-    )
-
-
-def _islands_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
+def _islands_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
     """Fused split-and-stitch islands — the sessionize_events_chunked
     dataflow with the type-equality fuse rule instead of the time-gap
     rule: ONE event-level window pass (in-chunk lag + running sum share
@@ -757,11 +685,9 @@ def _islands_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
     rn-diff spelling is asserted at tiny chunk widths (many seams), in
     the hybrid tests, and on the XL hot twin."""
     from osm2orc_spark.operators.cache import release_with
-    from osm2orc_spark.operators.chunked import DEFAULT_CHUNK_MS
 
-    cm = chunk_ms or DEFAULT_CHUNK_MS
     ms = F.unix_millis("ts")
-    evc = ev.withColumn("_chunk", F.floor(ms / F.lit(cm)).cast("bigint"))
+    evc = ev.withColumn("_chunk", F.floor(ms / F.lit(chunk_ms)).cast("bigint"))
     wl = W.partitionBy("user_id", "_chunk").orderBy("ts", "event_id")
     flagged = evc.withColumn("_prev", F.lag("event_type").over(wl)).withColumn(
         "_f",
@@ -823,21 +749,11 @@ def _islands_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
     )
 
 
-def asof_join_next_event_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
+def _asof_next_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
     """Forward as-of via chunked running last over the DESC scan: the
     carry-in from later chunks replaces the unbounded ignore-nulls
     window."""
-    ev = load(spark, sf_dir, "events")
-    return _asof_next_chunked_core(ev, chunk_ms).orderBy("purchase_id")
-
-
-def _asof_next_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
-    from osm2orc_spark.operators.chunked import (
-        DEFAULT_CHUNK_MS,
-        chunked_running_last,
-    )
+    from osm2orc_spark.operators.chunked import chunked_running_last
 
     tagged = _asof_next_tagged(ev)
     d = chunked_running_last(
@@ -845,7 +761,7 @@ def _asof_next_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
         "user_id",
         ["e_id", "e_ts"],
         ("ts", "is_p", "event_id"),
-        chunk_ms or DEFAULT_CHUNK_MS,
+        chunk_ms,
         desc=True,
     )
     return (
@@ -860,20 +776,7 @@ def _asof_next_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
     )
 
 
-def scd2_user_value_bands_chunked(
-    spark: SparkSession, sf_dir: str, chunk_ms: int | None = None
-) -> DataFrame:
-    """SCD2 with every window bounded: prev_band via chunked_prev, the
-    global row number via chunked_running_sum(1), n_user via a plain
-    groupBy+join (map-side combinable), and the change-stream lead via
-    chunked_prev over the DESC order — the change stream is usually
-    tiny, but a band-flapping hot user makes it the same straggler, so
-    it gets the same treatment."""
-    ev = _scd2_banded(load(spark, sf_dir, "events"))
-    return _scd2_chunked_core(ev, chunk_ms)
-
-
-def _scd2_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
+def _scd2_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
     """Fully-fused chunked SCD2 front end: prev_band, the global row
     number AND n_user all arrive through ONE chunk pass + ONE bounded
     summary join — n_user is SUM(per-chunk counts) over the user's
@@ -881,14 +784,9 @@ def _scd2_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
     join the two-primitive spelling paid (a full exchange each on
     band-flappy data, where changes are most rows) disappears.  The
     change-stream lead stays a chunked_prev over the DESC order."""
-    from osm2orc_spark.operators.chunked import (
-        DEFAULT_CHUNK_MS,
-        _with_chunk,
-        chunked_prev,
-    )
+    from osm2orc_spark.operators.chunked import _with_chunk, chunked_prev
 
-    cm = chunk_ms or DEFAULT_CHUNK_MS
-    d = _with_chunk(ev, "ts", cm, False)
+    d = _with_chunk(ev, "ts", chunk_ms, False)
     wl = W.partitionBy("user_id", "_chunk").orderBy("ts", "event_id")
     out = d.withColumn("_rn", F.row_number().over(wl)).withColumn(
         "_inprev", F.lag("band").over(wl)
@@ -922,7 +820,7 @@ def _scd2_chunked_core(ev: DataFrame, chunk_ms: int | None) -> DataFrame:
         "n_user",
     )
     led = chunked_prev(
-        changes, "user_id", ["valid_from", "rn"], ("valid_from", "rn"), cm, desc=True
+        changes, "user_id", ["valid_from", "rn"], ("valid_from", "rn"), chunk_ms, desc=True
     )
     return led.select(
         "user_id",

@@ -17,6 +17,7 @@ correctness gate runs both and hash-compares values, so:
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -108,17 +109,39 @@ GATE_PRIORITY_BY_ROUND: dict[int, tuple[str, ...]] = {
 GATE_PRIORITY: tuple[str, ...] = GATE_PRIORITY_BY_ROUND[max(GATE_PRIORITY_BY_ROUND)]
 
 
-def all_queries() -> dict[str, Query]:
-    # Import side-effect modules that populate the registry.  Import order
-    # matters: composed oracles (curation) are assembled from earlier
-    # registry entries at import time.  Gate ORDER is applied afterwards.
-    from osm2orc_spark.queries import relational  # noqa: F401
-    from osm2orc_spark.operators import dedup, similarity, text, multimodal  # noqa: F401
-    from osm2orc_spark.operators import ann_index, curation, graph, layout  # noqa: F401
-    from osm2orc_spark.queries import advanced, osm_corpus, sequences, tpch_extra  # noqa: F401
-    from osm2orc_spark.streaming import events  # noqa: F401
+#: the modules whose import populates REGISTRY, in registration order.
+#: Import order matters: composed oracles (curation) are assembled from
+#: earlier registry entries at import time.  The same list ranks gate
+#: ties (module, then definition order), so the order does not depend
+#: on which query module a caller happened to import first.
+_QUERY_MODULES: tuple[str, ...] = (
+    "osm2orc_spark.queries.relational",
+    "osm2orc_spark.operators.dedup",
+    "osm2orc_spark.operators.similarity",
+    "osm2orc_spark.operators.text",
+    "osm2orc_spark.operators.multimodal",
+    "osm2orc_spark.operators.ann_index",
+    "osm2orc_spark.operators.curation",
+    "osm2orc_spark.operators.graph",
+    "osm2orc_spark.operators.layout",
+    "osm2orc_spark.queries.advanced",
+    "osm2orc_spark.queries.osm_corpus",
+    "osm2orc_spark.queries.sequences",
+    "osm2orc_spark.queries.tpch_extra",
+    "osm2orc_spark.streaming.events",
+)
 
-    reg_index = {name: i for i, name in enumerate(REGISTRY)}
+
+def all_queries() -> dict[str, Query]:
+    for mod in _QUERY_MODULES:
+        importlib.import_module(mod)
+
+    module_rank = {mod: i for i, mod in enumerate(_QUERY_MODULES)}
+    # Within one module REGISTRY insertion order is definition order.
+    reg_index = {
+        name: (module_rank[q.fn.__module__], i)
+        for i, (name, q) in enumerate(REGISTRY.items())
+    }
     prio_index = {name: i for i, name in enumerate(GATE_PRIORITY)}
     # Staleness tier for verified re-confirmations: the round a query was
     # LAST driver-confirmed — oldest greens re-confirm first (r5 verdict
@@ -128,10 +151,10 @@ def all_queries() -> dict[str, Query]:
         for n in DRIVER_VERIFIED_BY_ROUND[rnd]:
             last_confirmed[n] = rnd  # later rounds overwrite earlier ones
 
-    def key(name: str) -> tuple[int, int, int]:
+    def key(name: str) -> tuple:
         # The current priority list re-gates stale + impl-touched queries first.
         if name in prio_index:
-            return (0, prio_index[name], 0)
+            return (0, prio_index[name], (0, 0))
         no_oracle = REGISTRY[name].oracle is None
         if name not in DRIVER_VERIFIED and not no_oracle:  # new this round
             return (1, 0, reg_index[name])

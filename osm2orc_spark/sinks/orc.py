@@ -537,7 +537,3 @@ def read_metadata(path: str, spark: SparkSession | None = None) -> dict:
             return json.load(f)
     except FileNotFoundError:
         return {}
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)

@@ -6,21 +6,10 @@ at the behavior being matched, the implementation is Spark-native.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from osm2orc_spark.schemas import LAT_TYPE, LON_TYPE
-
-
-def lat_decimal(col: Column) -> Column:
-    """B2: double -> DECIMAL(9,7) with NaN -> NULL
-    (reference OsmPbf2Orc.java:205-209)."""
-    return F.when(F.isnan(col), F.lit(None)).otherwise(col).cast(LAT_TYPE)
-
-
-def lon_decimal(col: Column) -> Column:
-    """B2: double -> DECIMAL(10,7), NaN -> NULL (OsmPbf2Orc.java:211-215)."""
-    return F.when(F.isnan(col), F.lit(None)).otherwise(col).cast(LON_TYPE)
 
 
 def bbox_decimal_from_string(col: Column, lon: bool = False) -> Column:
@@ -28,12 +17,6 @@ def bbox_decimal_from_string(col: Column, lon: bool = False) -> Column:
     string->decimal cast is exact (reference routes changeset bbox values
     through BigDecimal(String), OsmChangesetXml2Orc.java:142-171)."""
     return col.cast(LON_TYPE if lon else LAT_TYPE)
-
-
-def millis_to_timestamp(col: Column) -> Column:
-    """B5: epoch millis -> TIMESTAMP, nanos=0, UTC session
-    (OsmPbf2Orc.java:56,167-168)."""
-    return F.timestamp_millis(col)
 
 
 def optional_timestamp(col: Column) -> Column:
@@ -47,22 +30,3 @@ def open_flag(col: Column) -> Column:
     """B12: string 'true' compare -> boolean
     (ChangesetElementProcessor.java:55)."""
     return col == F.lit("true")
-
-
-def visible_flag(col: Column) -> Column:
-    """B8: default TRUE unless explicitly false
-    (OsmPbf2Orc.java:177-181; OrcWriter.java:142-145)."""
-    return F.coalesce(col, F.lit(True))
-
-
-def non_null_collections(df: DataFrame) -> DataFrame:
-    """B11: tags always a map (possibly empty), nds/members always arrays
-    (possibly empty) — never NULL (OsmPbf2Orc.java:149-165,183-191)."""
-    return (
-        df.withColumn("tags", F.coalesce("tags", F.map_from_arrays(F.array(), F.array())))
-        .withColumn("nds", F.coalesce("nds", F.array().cast(df.schema["nds"].dataType)))
-        .withColumn(
-            "members",
-            F.coalesce("members", F.array().cast(df.schema["members"].dataType)),
-        )
-    )

@@ -143,16 +143,6 @@ NOTES = {
         "vectors: 8.0e7 join rows vs the registered shape's 1.19e10 "
         "(which DNFs); 65% recall at cos >= 0.9 on planted pairs."
     ),
-    "scd2_user_value_bands_chunked": (
-        "Split-and-stitch SCD2 (late r8, non-registered; exemplar of the "
-        "operators/chunked.py family — transitions/islands/as-of twins "
-        "share the same three primitives): every window partitions by "
-        "(user_id, chunk) or runs over the bounded per-chunk summary; "
-        "n_user is a map-side-combinable groupBy+join, never "
-        "count() OVER (PARTITION BY user). Output proven row-identical "
-        "to the registered query at sf0.01 and the 4M-row xl_hot twin; "
-        "hot-user skew 5.0x -> 0.96."
-    ),
     "simhash_near_dup_refined": (
         "Recursive-pigeonhole SimHash refinement (late r8; since r9 the "
         "registered query's own auto-routed hot path — EXACT at any "
@@ -336,7 +326,6 @@ def main() -> None:
         "",
     ]
     from osm2orc_spark.operators.dedup import simhash_near_dup_refined
-    from osm2orc_spark.queries.sequences import scd2_user_value_bands_chunked
     from osm2orc_spark.operators.similarity import embedding_near_dup_lsh_refined
     from osm2orc_spark.queries.relational import sessionize_events_chunked
 
@@ -385,7 +374,6 @@ def main() -> None:
         "sessionize_events_chunked": sessionize_events_chunked,
         "embedding_near_dup_lsh_refined": embedding_near_dup_lsh_refined,
         "simhash_near_dup_refined": simhash_near_dup_refined,
-        "scd2_user_value_bands_chunked": scd2_user_value_bands_chunked,
         "curation_decontaminate_factored": _forced(
             "curation_decontaminate", "DECON_FLAT_PAIRS_MAX"
         ),

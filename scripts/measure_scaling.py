@@ -139,57 +139,32 @@ XL_QUERIES = [
 XL_PASSES = int(os.environ.get("SKEW_XL_PASSES", "2"))
 
 
-def _extra_fns() -> dict:
-    """Non-registered scale-path variants measurable by this harness."""
-    from osm2orc_spark.queries.advanced import asof_join_last_purchase_chunked
-    from osm2orc_spark.queries.relational import (
-        sessionize_events_chunked,
-        window_lag_transitions_chunked,
-    )
-    from osm2orc_spark.queries.sequences import (
-        asof_join_next_event_chunked,
-        event_run_islands_chunked,
-        event_transitions_chunked,
-        scd2_user_value_bands_chunked,
-    )
-
-    return {
-        "sessionize_events_chunked": sessionize_events_chunked,
-        "window_lag_transitions_chunked": window_lag_transitions_chunked,
-        "event_run_islands_chunked": event_run_islands_chunked,
-        "event_transitions_chunked": event_transitions_chunked,
-        "asof_join_next_event_chunked": asof_join_next_event_chunked,
-        "scd2_user_value_bands_chunked": scd2_user_value_bands_chunked,
-        "asof_join_last_purchase_chunked": asof_join_last_purchase_chunked,
-    }
-
-
-# The per-user window family (late r8): each registered query and its
-# chunked twin, measured on both XL event twins by --event-windows.
-# The registered spellings blow up 3-6x on the 2M-row hot user; the
-# chunked twins hold 0.81-1.30 (xl_event_windows* in SCALING_SKEW.jsonl).
-EVENT_WINDOW_PAIRS = [
-    ("window_lag_transitions", "window_lag_transitions_chunked"),
-    ("event_transitions", "event_transitions_chunked"),
-    ("event_run_islands", "event_run_islands_chunked"),
-    ("asof_join_next_event", "asof_join_next_event_chunked"),
-    ("scd2_user_value_bands", "scd2_user_value_bands_chunked"),
-    ("asof_join_last_purchase", "asof_join_last_purchase_chunked"),
+# The per-user window family: each registered query is timed on both XL
+# event twins twice, once with the hot-key threshold forced sky-high (the
+# window spelling) and once forced to 0 (the chunked spelling), by
+# --event-windows.  The window spellings blow up 3-6x on the 2M-row hot
+# user; the chunked spellings hold 0.81-1.30 (xl_event_windows* in
+# SCALING_SKEW.jsonl).
+EVENT_WINDOW_QUERIES = [
+    "window_lag_transitions",
+    "event_transitions",
+    "event_run_islands",
+    "asof_join_next_event",
+    "scd2_user_value_bands",
+    "asof_join_last_purchase",
 ]
+_EVENT_WINDOW_SPELLINGS = {"window": 10**18, "chunked": 0}
 
 
 def main_event_windows() -> None:
     """Reproduce the xl_event_windows + xl_event_windows_chunked record:
     walls (warm + XL_PASSES, min) on both XL event twins for every
-    registered per-user window query and its chunked twin, plus a
-    row-identity check of each pair on the xl_hot twin.
-
-    r9: the REGISTERED queries now auto-switch to the chunked spelling
-    when the max-rows-per-key probe exceeds switches.HOT_KEY_ROWS
-    (r8 verdict #1) — each record carries the strategy that actually
-    ran (the probe is memoized, so the warm pass pays it once per twin;
-    timed passes are probe-free, the steady-state a probe-once/run-many
-    deployment sees)."""
+    registered per-user window query, once per spelling (the spelling is
+    forced through switches.HOT_KEY_ROWS; probes are cleared between
+    spellings), plus a row-identity check of the two spellings on the
+    xl_hot twin.  HOT_KEY_ROWS is also the burst-width bar
+    (switches.burst_chunk_ms), so the forced chunked spelling runs at
+    the narrowest chunk width the ladder reaches."""
     from osm2orc_spark.operators import switches
 
     spark = get_spark(
@@ -199,45 +174,50 @@ def main_event_windows() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     dirs = _build_xl_data(spark)
     qs = all_queries()
-    extra = _extra_fns()
-    engaged = {
-        mode: switches.window_strategy(spark, dirs[mode])[0]
-        for mode in ("xl_base", "xl_hot")
-    }
-    for reg_name, chk_name in EVENT_WINDOW_PAIRS:
-        for name in (reg_name, chk_name):
-            fn = qs[name].fn if name in qs else extra[name]
-            rec = {"micro": "xl_event_windows" + ("_chunked" if name == chk_name else ""),
-                   "round": 9, "query": name, "xl_rep": XL_REP}
-            if name == reg_name:
-                rec["strategy"] = dict(engaged)
-            walls = {}
-            for mode in ("xl_base", "xl_hot"):
-                w = []
-                for i in range(XL_PASSES + 1):
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    fn(spark, dirs[mode]).count()
-                    w.append(time.perf_counter() - t0)
-                walls[mode] = min(w[1:])
-                rec[f"{mode.split('_')[1]}_wall_min_sec"] = round(walls[mode], 3)
-            rec["skew_ratio"] = round(walls["xl_hot"] / walls["xl_base"], 2)
-            print(json.dumps(rec), flush=True)
-        reg = qs[reg_name].fn(spark, dirs["xl_hot"])
-        chk = extra[chk_name](spark, dirs["xl_hot"])
-        n_reg, n_chk = reg.count(), chk.count()
-        same = (
-            n_reg == n_chk
-            and reg.exceptAll(chk.select(*reg.columns)).count() == 0
-            and chk.select(*reg.columns).exceptAll(reg).count() == 0
-        )
-        print(
-            json.dumps(
-                {"micro": "xl_event_windows_identity", "round": 9,
-                 "pair": reg_name, "rows": n_reg, "identical": same}
-            ),
-            flush=True,
-        )
+    saved = switches.HOT_KEY_ROWS
+    try:
+        for name in EVENT_WINDOW_QUERIES:
+            fn = qs[name].fn
+            hot_out = {}
+            for spelling, threshold in _EVENT_WINDOW_SPELLINGS.items():
+                switches.HOT_KEY_ROWS = threshold
+                switches.probe_cache_clear()
+                rec = {"micro": "xl_event_windows"
+                       + ("_chunked" if spelling == "chunked" else ""),
+                       "query": name, "spelling": spelling, "xl_rep": XL_REP}
+                walls = {}
+                for mode in ("xl_base", "xl_hot"):
+                    rec.setdefault("strategy", {})[mode] = (
+                        switches.window_strategy(spark, dirs[mode])[0]
+                    )
+                    w = []
+                    for i in range(XL_PASSES + 1):
+                        spark.catalog.clearCache()
+                        t0 = time.perf_counter()
+                        fn(spark, dirs[mode]).count()
+                        w.append(time.perf_counter() - t0)
+                    walls[mode] = min(w[1:])
+                    rec[f"{mode.split('_')[1]}_wall_min_sec"] = round(walls[mode], 3)
+                rec["skew_ratio"] = round(walls["xl_hot"] / walls["xl_base"], 2)
+                print(json.dumps(rec), flush=True)
+                hot_out[spelling] = fn(spark, dirs["xl_hot"])
+            win, chk = hot_out["window"], hot_out["chunked"]
+            n_win, n_chk = win.count(), chk.count()
+            same = (
+                n_win == n_chk
+                and win.exceptAll(chk.select(*win.columns)).count() == 0
+                and chk.select(*win.columns).exceptAll(win).count() == 0
+            )
+            print(
+                json.dumps(
+                    {"micro": "xl_event_windows_identity", "query": name,
+                     "rows": n_win, "identical": same}
+                ),
+                flush=True,
+            )
+    finally:
+        switches.HOT_KEY_ROWS = saved
+        switches.probe_cache_clear()
     spark.stop()
 
 
@@ -650,8 +630,10 @@ def main_skew_xl() -> None:
     if not only:
         print(json.dumps(_df_micro(spark, dirs["xl_hot"])), flush=True)
         print(json.dumps(_sessionize_xl_identity(spark, dirs["xl_hot"])), flush=True)
+    from osm2orc_spark.queries.relational import sessionize_events_chunked
+
     qs = all_queries()
-    extra = _extra_fns()
+    extra = {"sessionize_events_chunked": sessionize_events_chunked}
     results: dict[str, dict] = {}
     for name, family in XL_QUERIES:
         if only and name not in only:

@@ -1,14 +1,14 @@
 """Split-and-stitch window family: exactness of the chunked primitives
-and of the five *_chunked variants (late r8).
+and of the registered window queries' chunked paths.
 
 The xl_event_windows sweep measured the per-user window family blowing
 up 3-6x on a 2x10^6-row hot user; the cure (operators/chunked.py) must
 be OUTPUT-IDENTICAL — the primitives are checked directly against the
-unbounded-window spelling they replace, and every variant against its
-registered twin.  A tiny chunk width (forcing MANY seams through the
-stitch paths) is used alongside the default, so seam handling is
-exercised even at sf0.01 where the default 1 h chunk may leave few
-boundaries.
+unbounded-window spelling they replace, and every registered query's
+forced chunked path against its window path.  A tiny chunk width
+(forcing MANY seams through the stitch paths) is used alongside the
+default, so seam handling is exercised even at sf0.01 where the default
+1 h chunk may leave few boundaries.
 """
 
 from __future__ import annotations
@@ -87,35 +87,44 @@ def test_chunked_running_last_desc_equals_window(spark, events, chunk_ms):
     assert got.exceptAll(exp).count() == 0
 
 
-def _variant_pairs():
-    from osm2orc_spark.queries.advanced import asof_join_last_purchase_chunked
-    from osm2orc_spark.queries.relational import window_lag_transitions_chunked
-    from osm2orc_spark.queries.sequences import (
-        asof_join_next_event_chunked,
-        event_run_islands_chunked,
-        event_transitions_chunked,
-        scd2_user_value_bands_chunked,
+# Window-family queries whose chunked spelling takes a chunk width; the
+# id names the spelling under test (query + its chunked path).
+_CHUNKED_SPELLINGS = [
+    pytest.param(name, id=f"{name}-{name}_chunked")
+    for name in (
+        "window_lag_transitions",
+        "event_transitions",
+        "event_run_islands",
+        "asof_join_next_event",
+        "scd2_user_value_bands",
+        "asof_join_last_purchase",
     )
-
-    return [
-        ("window_lag_transitions", window_lag_transitions_chunked),
-        ("event_transitions", event_transitions_chunked),
-        ("event_run_islands", event_run_islands_chunked),
-        ("asof_join_next_event", asof_join_next_event_chunked),
-        ("scd2_user_value_bands", scd2_user_value_bands_chunked),
-        ("asof_join_last_purchase", asof_join_last_purchase_chunked),
-    ]
+]
 
 
-@pytest.mark.parametrize("name,fn", _variant_pairs())
+@pytest.mark.parametrize("name", _CHUNKED_SPELLINGS)
 @pytest.mark.parametrize("chunk_ms", [TINY_CHUNK_MS, None])
 def test_chunked_variant_identical_to_registered(
-    spark, sf_correctness, name, fn, chunk_ms
+    spark, sf_correctness, name, chunk_ms, monkeypatch
 ):
+    """The registered query forced down its all-chunked path (every
+    non-null key through the split-and-stitch core) at ``chunk_ms``
+    (None: the core's default width) equals its window path."""
+    from osm2orc_spark.operators import switches
     from osm2orc_spark.registry import all_queries
 
-    reg = all_queries()[name].fn(spark, sf_correctness)
-    chk = fn(spark, sf_correctness, chunk_ms=chunk_ms)
+    fn = all_queries()[name].fn
+    reg = fn(spark, sf_correctness)
+    switches.probe_cache_clear()
+    monkeypatch.setattr(switches, "HOT_KEY_ROWS", 0)
+    monkeypatch.setattr(switches, "HOT_KEY_MAX_LIST", 0)
+    monkeypatch.setattr(
+        switches,
+        "burst_chunk_ms",
+        lambda spark, sf_dir, default_ms, *a, **k: chunk_ms or default_ms,
+    )
+    assert switches.window_strategy(spark, sf_correctness)[0] == "chunked"
+    chk = fn(spark, sf_correctness)
     n_reg, n_chk = reg.count(), chk.count()
     assert n_reg > 0
     assert n_reg == n_chk

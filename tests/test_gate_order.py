@@ -22,6 +22,8 @@ from __future__ import annotations
 import glob
 import json
 import re
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -45,6 +47,24 @@ def test_order_snapshot():
     from osm2orc_spark.registry import all_queries
 
     assert list(all_queries()) == json.loads(SNAPSHOT.read_text())
+
+
+def test_order_snapshot_independent_of_import_order():
+    """Gate ties rank by the fixed query-module list, not by whichever
+    query module a caller imported first: a fresh interpreter that
+    imports osm_corpus and sequences before the registry still yields
+    the snapshot order."""
+    code = (
+        "import json, osm2orc_spark.queries.osm_corpus, "
+        "osm2orc_spark.queries.sequences\n"
+        "from osm2orc_spark.registry import all_queries\n"
+        "print(json.dumps(list(all_queries())))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True,
+        text=True, check=True,
+    ).stdout
+    assert json.loads(out.splitlines()[-1]) == json.loads(SNAPSHOT.read_text())
 
 
 def test_gate_priority_well_formed():

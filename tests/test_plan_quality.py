@@ -173,24 +173,29 @@ def test_pair_distinct_rides_verify_distribution(spark, sf_correctness):
     ClusteredDistribution([doc_a, doc_b]) and the verify joins' doc_a
     clustering, so no exchange keyed by BOTH pair columns may survive
     (the old spelling paid a (doc_a, doc_b) distinct exchange AND a
-    doc_a repartition over the same rows)."""
+    doc_a repartition over the same rows).  Offenders are matched on
+    the exchange's partitioning expression list, not on the whole plan
+    line."""
+    import re
+
+    exchange = re.compile(r"Exchange hashpartitioning\(([^)]*)\)")
     for name in (
         "dedup_ppjoin",
         "dedup_minhash_lsh",
         "dedup_containment_ppjoin",
         "dedup_containment_pairs",
+        "dedup_ngram_jaccard",
+        "dedup_minhash_calibration",
     ):
         df = QUERIES[name].fn(spark, sf_correctness)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         final = plan.split("== Initial Plan ==")[0]
-        offenders = [
-            line.strip()[:160]
-            for line in final.splitlines()
-            if "Exchange hashpartitioning" in line
-            and "doc_a" in line
-            and "doc_b" in line
-        ]
+        offenders = []
+        for exprs in exchange.findall(final):
+            cols = {re.sub(r"#\d+L?$", "", e.strip()) for e in exprs.split(",")}
+            if {"doc_a", "doc_b"} <= cols:
+                offenders.append(exprs)
         assert not offenders, f"{name}: pair-keyed exchange survived: {offenders}"
         assert "REPARTITION_BY_NUM" in final, name  # the fused doc_a exchange
         spark.catalog.clearCache()

@@ -51,17 +51,7 @@ def test_table_rows_probe(spark, sf_smoke):
     assert switches.table_rows(spark, sf_smoke, "documents") == n
 
 
-WINDOW_FAMILY = [
-    "sessionize_events",
-    "window_lag_transitions",
-    "event_transitions",
-    "event_run_islands",
-    "scd2_user_value_bands",
-    "asof_join_next_event",
-    "asof_join_last_purchase",
-    "rolling_hour_user_activity",
-    "asof_join_tolerance",
-]
+WINDOW_FAMILY = list(switches._WINDOW_FAMILY_SWITCHED)
 
 
 @pytest.mark.parametrize("name", WINDOW_FAMILY)
@@ -810,51 +800,53 @@ def test_window_family_hybrid_identity(spark, sf_correctness, name, monkeypatch)
     assert hybrid.select(*base.columns).exceptAll(base).count() == 0
 
 
-def test_hybrid_null_keys_not_dropped(spark, tmp_path, monkeypatch):
-    """NULL partition keys must survive the hybrid split: plain ~isin is
-    NULL for a NULL key (dropped from BOTH branches); cold_pred routes
-    them to the window branch, and a hot NULL key escalates to
-    all-chunked (inexpressible in an isin split)."""
-    from osm2orc_spark.queries.relational import _sessionize_window, sessionize_events
-    from osm2orc_spark.tables import load
+@pytest.mark.parametrize("name", WINDOW_FAMILY)
+def test_window_family_null_keys_not_dropped(spark, tmp_path, name, monkeypatch):
+    """NULL partition keys must survive every strategy of the window
+    dispatcher: plain ~isin is NULL for a NULL key (dropped from BOTH
+    hybrid branches); the cold predicate routes them to the window
+    branch, a hot NULL key is never listed (inexpressible in an isin
+    split), and the all-chunked split keeps them on the window core."""
+    from osm2orc_spark.registry import all_queries
 
     rows = []
-    for uid, n in ((1, 8), (2, 2), (None, 3)):
-        rows += [(uid, i * 60_000, 100 * (uid or 9) + i) for i in range(n)]
+    for uid, n in ((1, 8), (2, 2), (None, 5)):
+        rows += [
+            (uid, i * 60_000, 100 * (uid or 9) + i,
+             "purchase" if i % 4 == 1 else "view", float(10 * i))
+            for i in range(n)
+        ]
     spark.createDataFrame(
-        rows, "user_id int, ms long, event_id long"
+        rows, "user_id int, ms long, event_id long, event_type string, value double"
     ).select(
         "user_id", F.timestamp_millis("ms").alias("ts"), "event_id",
-        F.lit("view").alias("event_type"), F.lit(1.0).alias("value"),
-        F.lit(None).cast("string").alias("props"),
+        "event_type", "value", F.lit(None).cast("string").alias("props"),
     ).write.parquet(str(tmp_path / "events.parquet"))
+    d = str(tmp_path)
+    fn = all_queries()[name].fn
+    assert switches.window_strategy(spark, d)[0] == "window"
+    exp = fn(spark, d)  # default threshold: the window path
+    assert exp.count() > 0
+    if "user_id" in exp.columns:
+        assert exp.filter(F.col("user_id").isNull()).count() > 0
+
+    def assert_same(got):
+        assert got.count() == exp.count()
+        assert exp.exceptAll(got.select(*exp.columns)).count() == 0
+        assert got.select(*exp.columns).exceptAll(exp).count() == 0
+
     monkeypatch.setattr(switches, "HOT_KEY_ROWS", 5)  # user 1 hot, NULL cold
-    strategy, hot = switches.window_strategy(spark, str(tmp_path))
-    assert strategy == "hybrid" and hot == (1,)
-    got = sessionize_events(spark, str(tmp_path))
-    exp = _sessionize_window(load(spark, str(tmp_path), "events"))
-    assert got.count() == exp.count() > 0
-    assert exp.exceptAll(got.select(*exp.columns)).count() == 0
-    # NULL-key rows are present in the output
-    assert got.filter(F.col("user_id").isNull()).count() > 0
-    # a hot NULL key is NOT listed (cannot ride isin; chunked stitch
-    # joins need non-null keys) — NULL rows stay on the window branch
-    switches.probe_cache_clear()
-    monkeypatch.setattr(switches, "HOT_KEY_ROWS", 2)  # users 1 AND NULL over
-    strategy2, hot2 = switches.window_strategy(spark, str(tmp_path))
-    assert strategy2 == "hybrid" and hot2 == (1,)
-    got2 = sessionize_events(spark, str(tmp_path))
-    assert got2.count() == exp.count()
-    assert exp.exceptAll(got2.select(*exp.columns)).count() == 0
-    # the ALL-CHUNKED branch must also keep NULL rows (window split)
-    switches.probe_cache_clear()
+    assert switches.window_strategy(spark, d) == ("hybrid", (1,))
+    assert_same(fn(spark, d))
+    # users 1 AND NULL over the bar: only user 1 is listed, NULL rows
+    # stay on the window branch
+    monkeypatch.setattr(switches, "HOT_KEY_ROWS", 2)
+    assert switches.window_strategy(spark, d) == ("hybrid", (1,))
+    assert_same(fn(spark, d))
     monkeypatch.setattr(switches, "HOT_KEY_MAX_LIST", 0)
-    strategy3, _ = switches.window_strategy(spark, str(tmp_path))
-    assert strategy3 == "chunked"
-    got3 = sessionize_events(spark, str(tmp_path))
-    assert got3.count() == exp.count()
-    assert exp.exceptAll(got3.select(*exp.columns)).count() == 0
-    assert got3.filter(F.col("user_id").isNull()).count() > 0
+    switches.probe_cache_clear()
+    assert switches.window_strategy(spark, d)[0] == "chunked"
+    assert_same(fn(spark, d))
 
 
 def test_vectorized_ann_scan_zero_norm_null(spark, tmp_path):
