@@ -541,10 +541,10 @@ def _rank_cap(
     literal upper bound that holds for every group (e.g. the global mix
     target — quota = TARGET*q DIV sum_q <= TARGET). The measured
     alternative — a salted two-phase rank that also splits the residual
-    cap_bound*tasks concentration — costs ~1.5x at every locally
-    measurable hot size (scripts/measure_scaling.py --rank-crossover),
-    so this shape is the keeper until a real cluster shows the residual
-    matters.
+    cap_bound*tasks concentration — costs 1.07-1.40x this shape at every
+    locally measurable hot size (the ``rank_cap_crossover`` records in
+    SCALING_SKEW.jsonl), so this shape is the keeper until a real
+    cluster shows the residual matters.
     """
     if isinstance(cap, int):
         cap_col = F.lit(cap)

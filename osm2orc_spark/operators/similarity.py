@@ -863,14 +863,15 @@ def _rp_sigs_and_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame
     a = chunks.select(F.col("vec_id").alias("vec_a"), "c", "cv")
     b = chunks.select(F.col("vec_id").alias("vec_b"), "c", "cv")
     # NOTE(r15): the dedup family's pair-distinct fusion (repartition the
-    # raw match rows by vec_a so the distinct rides one exchange —
-    # scripts/ab_rp_pairdist_r15.py) was tried here and measured WORSE
-    # 6/6 at sf0.1 (min 1.083 vs 0.939, med 1.230 vs 1.021): unlike the
-    # shingle verifies (array_intersect over full shingle sets, heavy
-    # enough that r14 already needed an explicit repartition), the cosine
-    # dot per pair is light, so AQE's byte-based coalesce of the distinct
-    # exchange IS the right plan and a fixed-N repartition only adds
-    # tasks and scheduling overhead.  Left as the AQE-planned distinct.
+    # raw match rows by vec_a so the distinct rides one exchange; see
+    # "RP-LSH pair-distinct fusion" in OPTIMIZATION_r15.md) was tried
+    # here and measured WORSE 6/6 at sf0.1 (min 1.083 vs 0.939, med
+    # 1.230 vs 1.021): unlike the shingle verifies (array_intersect over
+    # full shingle sets, heavy enough that r14 already needed an explicit
+    # repartition), the cosine dot per pair is light, so AQE's
+    # byte-based coalesce of the distinct exchange IS the right plan and
+    # a fixed-N repartition only adds tasks and scheduling overhead.
+    # Left as the AQE-planned distinct.
     cand = (
         a.join(b, ["c", "cv"])
         .filter(F.col("vec_a") < F.col("vec_b"))

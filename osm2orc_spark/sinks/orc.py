@@ -452,12 +452,8 @@ def write_orc(
     path: str,
     bounds: tuple[float, float, float, float] | None = None,
     sort_type_then_id: bool = True,
-    bloom_filter_tags: bool = False,
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
     embed_metadata: bool = True,
     compression: str = "zlib",
-    extra_options: dict[str, str] | None = None,
 ) -> None:
     """Write an OSM DataFrame as ORC with reference-equivalent options.
 
@@ -471,19 +467,13 @@ def write_orc(
     out = df
     if sort_type_then_id and {"type", "id"} <= set(df.columns):
         out = out.sortWithinPartitions("type", "id")
-    writer = (
-        out.write.mode(mode)
+    (
+        out.write.mode("overwrite")
         .format("orc")
         .option("orc.block.padding", "false")
         .option("compression", compression)
+        .save(path)
     )
-    if bloom_filter_tags:
-        writer = writer.option("orc.bloom.filter.columns", "tags")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    for k, v in (extra_options or {}).items():
-        writer = writer.option(k, v)
-    writer.save(path)
 
     metadata = {"osm.schema.version": OSM_SCHEMA_VERSION}
     if bounds is not None:

@@ -139,88 +139,6 @@ XL_QUERIES = [
 XL_PASSES = int(os.environ.get("SKEW_XL_PASSES", "2"))
 
 
-# The per-user window family: each registered query is timed on both XL
-# event twins twice, once with the hot-key threshold forced sky-high (the
-# window spelling) and once forced to 0 (the chunked spelling), by
-# --event-windows.  The window spellings blow up 3-6x on the 2M-row hot
-# user; the chunked spellings hold 0.81-1.30 (xl_event_windows* in
-# SCALING_SKEW.jsonl).
-EVENT_WINDOW_QUERIES = [
-    "window_lag_transitions",
-    "event_transitions",
-    "event_run_islands",
-    "asof_join_next_event",
-    "scd2_user_value_bands",
-    "asof_join_last_purchase",
-]
-_EVENT_WINDOW_SPELLINGS = {"window": 10**18, "chunked": 0}
-
-
-def main_event_windows() -> None:
-    """Reproduce the xl_event_windows + xl_event_windows_chunked record:
-    walls (warm + XL_PASSES, min) on both XL event twins for every
-    registered per-user window query, once per spelling (the spelling is
-    forced through switches.HOT_KEY_ROWS; probes are cleared between
-    spellings), plus a row-identity check of the two spellings on the
-    xl_hot twin.  HOT_KEY_ROWS is also the burst-width bar
-    (switches.burst_chunk_ms), so the forced chunked spelling runs at
-    the narrowest chunk width the ladder reaches."""
-    from osm2orc_spark.operators import switches
-
-    spark = get_spark(
-        app_name="measure_scaling_event_windows",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    dirs = _build_xl_data(spark)
-    qs = all_queries()
-    saved = switches.HOT_KEY_ROWS
-    try:
-        for name in EVENT_WINDOW_QUERIES:
-            fn = qs[name].fn
-            hot_out = {}
-            for spelling, threshold in _EVENT_WINDOW_SPELLINGS.items():
-                switches.HOT_KEY_ROWS = threshold
-                switches.probe_cache_clear()
-                rec = {"micro": "xl_event_windows"
-                       + ("_chunked" if spelling == "chunked" else ""),
-                       "query": name, "spelling": spelling, "xl_rep": XL_REP}
-                walls = {}
-                for mode in ("xl_base", "xl_hot"):
-                    rec.setdefault("strategy", {})[mode] = (
-                        switches.window_strategy(spark, dirs[mode])[0]
-                    )
-                    w = []
-                    for i in range(XL_PASSES + 1):
-                        spark.catalog.clearCache()
-                        t0 = time.perf_counter()
-                        fn(spark, dirs[mode]).count()
-                        w.append(time.perf_counter() - t0)
-                    walls[mode] = min(w[1:])
-                    rec[f"{mode.split('_')[1]}_wall_min_sec"] = round(walls[mode], 3)
-                rec["skew_ratio"] = round(walls["xl_hot"] / walls["xl_base"], 2)
-                print(json.dumps(rec), flush=True)
-                hot_out[spelling] = fn(spark, dirs["xl_hot"])
-            win, chk = hot_out["window"], hot_out["chunked"]
-            n_win, n_chk = win.count(), chk.count()
-            same = (
-                n_win == n_chk
-                and win.exceptAll(chk.select(*win.columns)).count() == 0
-                and chk.select(*win.columns).exceptAll(win).count() == 0
-            )
-            print(
-                json.dumps(
-                    {"micro": "xl_event_windows_identity", "query": name,
-                     "rows": n_win, "identical": same}
-                ),
-                flush=True,
-            )
-    finally:
-        switches.HOT_KEY_ROWS = saved
-        switches.probe_cache_clear()
-    spark.stop()
-
-
 def _sessionize_xl_identity(spark, hot_dir: str) -> dict:
     """Exact set-identity of chunked vs registered sessionization on the
     xl_hot twin (both outputs are duplicate-free on (user_id,
@@ -356,267 +274,6 @@ def _build_xl_data(spark) -> dict[str, str]:
     return out
 
 
-def _df_micro(spark, hot_dir: str) -> dict:
-    """Isolated before/after measurement of the r7 PPJoin df fix at a df
-    that can actually straggle: both shapes emit the identical
-    (doc_id, shingle, df) stream off the same cached shingle frame —
-    'window' is count(*) OVER (PARTITION BY shingle) (the r5 shape: no
-    partial agg, hot partition unsplittable), 'groupby_join' is
-    groupBy(shingle).count() + equi-join back (the r7 shape: map-side
-    combine, AQE-splittable join)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from osm2orc_spark.operators.dedup import _shingles
-
-    sh = _shingles(spark, hot_dir).persist()
-    n_rows = sh.count()
-    hot_df = (
-        sh.groupBy("shingle").count().agg(F.max("count")).collect()[0][0]
-    )
-
-    def shape_window():
-        return sh.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-        )
-
-    def shape_groupby_join():
-        dfs = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        return sh.join(dfs, "shingle")
-
-    walls = {}
-    for label, shape in (("window", shape_window), ("groupby_join", shape_groupby_join)):
-        shape().write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(XL_PASSES):
-            t0 = time.perf_counter()
-            shape().write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        walls[label] = round(best, 3)
-    sh.unpersist()
-    return {
-        "micro": "ppjoin_df_shapes",
-        "shingle_rows": n_rows,
-        "hot_shingle_df": hot_df,
-        **{f"{k}_sec": v for k, v in walls.items()},
-        "window_over_groupby_ratio": round(
-            walls["window"] / walls["groupby_join"], 2
-        ),
-    }
-
-
-def main_df_crossover() -> None:
-    """Find the hot-key size where the window df shape actually loses.
-
-    The XL micro (df 10^5) showed the window STILL faster locally — a
-    100k-row window partition sorts in milliseconds on local[32], while
-    the groupBy+join re-shuffles the full stream once more.  This mode
-    sweeps a synthetic hot key (50% of a 2x-hot-size stream on ONE
-    shingle, rest unique) through 10^6 and 10^7 — the license-header df
-    regime the 100 TB argument is actually about — timing both shapes.
-    WindowExec buffers each partition in an ExternalAppendOnlyUnsafeRow
-    Array that spills past a few thousand rows, so the hot partition
-    degrades with df; the groupBy side map-combines to ~1 row per task
-    and its join-back is AQE-skew-splittable."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    spark = get_spark(
-        app_name="df_crossover",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    # Fixed 20M-row stream, growing hot share: the window's wall tracks
-    # the unsplittable hot-partition tail (linear in df), the groupBy's
-    # stays flat — the divergence, not a single point, is the evidence,
-    # because on one shared-memory box a straggler task and an extra
-    # full shuffle cost about the same wall.
-    for n, hot in (
-        (20_000_000, 100_000),
-        (20_000_000, 1_000_000),
-        (20_000_000, 10_000_000),
-        (20_000_000, 18_000_000),
-    ):
-        base = (
-            spark.range(n)
-            .select(
-                F.col("id"),
-                F.when(F.col("id") < hot, F.lit("HOT"))
-                .otherwise(F.concat(F.lit("s"), F.col("id").cast("string")))
-                .alias("shingle"),
-            )
-            .persist()
-        )
-        base.count()
-
-        def shape_window():
-            return base.withColumn(
-                "df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-            )
-
-        def shape_groupby_join():
-            dfs = base.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-            return base.join(dfs, "shingle")
-
-        walls = {}
-        for label, shape in (
-            ("window", shape_window),
-            ("groupby_join", shape_groupby_join),
-        ):
-            shape().write.format("noop").mode("overwrite").save()  # warm
-            best = float("inf")
-            for _ in range(XL_PASSES):
-                t0 = time.perf_counter()
-                shape().write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            walls[label] = round(best, 3)
-        base.unpersist()
-        print(
-            json.dumps(
-                {
-                    "micro": "df_shape_crossover",
-                    "rows": n,
-                    "hot_df": hot,
-                    **{f"{k}_sec": v for k, v in walls.items()},
-                    "window_over_groupby_ratio": round(
-                        walls["window"] / walls["groupby_join"], 2
-                    ),
-                }
-            ),
-            flush=True,
-        )
-    spark.stop()
-
-
-def main_rank_crossover() -> None:
-    """Measure the 'keep cap rows per group' shapes at hot-group sizes
-    that can actually straggle (the r7 curation rank-cap decision).
-
-    - window_quota: the pre-r7 curation_temperature_mix shape — one
-      row_number window per group, filtered on a per-group quota COLUMN
-      only. No literal in the rank predicate means
-      InferWindowGroupLimit cannot fire: the hot group's entire
-      occurrence list crosses the exchange and is sorted by one
-      unsplittable WindowExec task.
-    - window_conj: the ADOPTED r7 shape — same single window, rank
-      filter = (rn <= literal_bound) AND (rn <= quota). The literal
-      conjunct turns on WindowGroupLimit(Partial): each map task
-      forwards at most bound rows per group (the window analogue of
-      map-side combine), so the hot partition is bounded by
-      bound * tasks, never by the group's size.
-    - two_phase: the rejected alternative — salted local rank within
-      (group, salt) + exact re-rank of the survivors. Also skew-safe,
-      and it additionally splits the residual bound*tasks
-      concentration, but it pays an extra exchange + sort: measured
-      ~1.5x window_conj at every locally measurable hot size, which is
-      why it lost.
-
-    All shapes emit identical rows; the quota table assigns every group
-    the same cap so the comparison isolates plan shape. On local[32]
-    the absolute walls converge (a straggler task and an extra shuffle
-    cost about the same on one shared-memory box — the same caveat as
-    df_shape_crossover); the decisive facts are the structural bound
-    plus window_conj never costing more than window_quota."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    spark = get_spark(
-        app_name="rank_crossover",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    cap = 40
-    salts = 32
-    for n, hot in (
-        (20_000_000, 1_000_000),
-        (20_000_000, 18_000_000),
-        (100_000_000, 90_000_000),
-    ):
-        base = (
-            spark.range(n)
-            .select(
-                F.col("id").alias("doc_id"),
-                F.when(F.col("id") < hot, F.lit("HOT"))
-                .otherwise(
-                    F.concat(F.lit("g"), (F.col("id") % 1000).cast("string"))
-                )
-                .alias("source"),
-            )
-            .persist()
-        )
-        base.count()
-        quota = (
-            base.select("source")
-            .distinct()
-            .select("source", F.lit(cap).alias("quota"))
-        )
-        order_cols = (F.md5(F.col("doc_id").cast("string")), F.asc("doc_id"))
-        w = Window.partitionBy("source").orderBy(*order_cols)
-
-        def shape_window_quota():
-            return (
-                base.join(F.broadcast(quota), "source")
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= F.col("quota"))
-            )
-
-        def shape_window_conj():
-            return (
-                base.join(F.broadcast(quota), "source")
-                .withColumn("rn", F.row_number().over(w))
-                .filter((F.col("rn") <= F.lit(cap)) & (F.col("rn") <= F.col("quota")))
-            )
-
-        def shape_two_phase():
-            salted = base.join(F.broadcast(quota), "source").withColumn(
-                "_salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salts))
-            )
-            w1 = Window.partitionBy("source", "_salt").orderBy(*order_cols)
-            local = (
-                salted.withColumn("_rn1", F.row_number().over(w1))
-                .filter(
-                    (F.col("_rn1") <= F.lit(cap))
-                    & (F.col("_rn1") <= F.col("quota"))
-                )
-                .drop("_rn1", "_salt")
-            )
-            return local.withColumn("rn", F.row_number().over(w)).filter(
-                F.col("rn") <= F.col("quota")
-            )
-
-        walls = {}
-        for label, shape in (
-            ("window_quota", shape_window_quota),
-            ("window_conj", shape_window_conj),
-            ("two_phase", shape_two_phase),
-        ):
-            shape().write.format("noop").mode("overwrite").save()  # warm
-            best = float("inf")
-            for _ in range(XL_PASSES):
-                t0 = time.perf_counter()
-                shape().write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            walls[label] = round(best, 3)
-        base.unpersist()
-        print(
-            json.dumps(
-                {
-                    "micro": "rank_cap_crossover",
-                    "rows": n,
-                    "hot_group_rows": hot,
-                    "cap": cap,
-                    **{f"{k}_sec": v for k, v in walls.items()},
-                    "conj_over_quota_ratio": round(
-                        walls["window_conj"] / walls["window_quota"], 2
-                    ),
-                    "two_phase_over_conj_ratio": round(
-                        walls["two_phase"] / walls["window_conj"], 2
-                    ),
-                }
-            ),
-            flush=True,
-        )
-    spark.stop()
-
-
 def main_skew_xl() -> None:
     spark = get_spark(
         app_name="measure_scaling_skew_xl",
@@ -624,11 +281,10 @@ def main_skew_xl() -> None:
     )
     dirs = _build_xl_data(spark)
     # XL_ONLY: comma-separated query filter for re-measuring just the
-    # queries a plan change touched (skips the micros; the other lines
-    # in SCALING_SKEW.jsonl stay the record for unchanged plans).
+    # queries a plan change touched (skips the identity check; the other
+    # lines in SCALING_SKEW.jsonl stay the record for unchanged plans).
     only = {q for q in os.environ.get("XL_ONLY", "").split(",") if q}
     if not only:
-        print(json.dumps(_df_micro(spark, dirs["xl_hot"])), flush=True)
         print(json.dumps(_sessionize_xl_identity(spark, dirs["xl_hot"])), flush=True)
     from osm2orc_spark.queries.relational import sessionize_events_chunked
 
@@ -663,112 +319,6 @@ def main_skew_xl() -> None:
         flush=True,
     )
     spark.stop()
-
-
-def _ppjoin_variant(spark, sf_dir: str, positional: bool):
-    """dedup_ppjoin with the r8 positional filter togglable — candidate
-    pipeline otherwise identical to the registered query (df-ordered
-    array base, posexplode prefix ranks, length filter, array verify).
-    Returns (cand, result)."""
-    from pyspark.sql import functions as F
-
-    from osm2orc_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        _df_ordered_shingle_arrays,
-        _jaccard_pairs_arrays,
-    )
-    from osm2orc_spark.operators.cache import release_with
-
-    oarr, arrs = _df_ordered_shingle_arrays(spark, sf_dir)
-    arrs = arrs.persist()
-    oarr = oarr.persist()
-    pos = oarr.select("doc_id", "n", F.posexplode("arr").alias("idx", "shingle"))
-    prefix = pos.filter(
-        F.col("idx") + 1 <= F.col("n") - F.expr("(4*n + 4) div 5") + F.lit(1)
-    ).withColumn("rn", F.col("idx") + 1)
-    a = prefix.select(
-        F.col("doc_id").alias("doc_a"),
-        "shingle",
-        F.col("n").alias("na"),
-        F.col("rn").alias("rna"),
-    )
-    b = prefix.select(
-        F.col("doc_id").alias("doc_b"),
-        "shingle",
-        F.col("n").alias("nb"),
-        F.col("rn").alias("rnb"),
-    )
-    cand = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(F.lit(5) * F.least("na", "nb") >= F.lit(4) * F.greatest("na", "nb"))
-    )
-    if positional:
-        cand = cand.filter(
-            F.lit(9)
-            * (F.lit(1) + F.least(F.col("na") - F.col("rna"), F.col("nb") - F.col("rnb")))
-            >= F.lit(4) * (F.col("na") + F.col("nb"))
-        )
-    cand = cand.select("doc_a", "doc_b").distinct()
-    return cand, release_with(
-        _jaccard_pairs_arrays(cand, oarr, JACCARD_THRESHOLD), oarr, arrs
-    )
-
-
-def _containment_variant(spark, sf_dir: str, positional: bool):
-    """dedup_containment_ppjoin with the positional filter togglable."""
-    from pyspark.sql import functions as F
-
-    from osm2orc_spark.operators.dedup import (
-        CONTAIN_THRESHOLD,
-        _df_ordered_shingle_arrays,
-        _pair_intersections,
-    )
-    from osm2orc_spark.operators.cache import release_with
-
-    oarr, arrs = _df_ordered_shingle_arrays(spark, sf_dir)
-    arrs = arrs.persist()
-    oarr = oarr.persist()
-    pos = oarr.select("doc_id", "n", F.posexplode("arr").alias("idx", "shingle"))
-    prefix = pos.filter(
-        F.col("idx") + 1 <= F.col("n") - F.expr("(9*n + 9) div 10") + F.lit(1)
-    ).select(
-        F.col("doc_id").alias("doc_p"),
-        "shingle",
-        F.col("n").alias("np"),
-        (F.col("idx") + 1).alias("rnp"),
-    )
-    full = pos.select(
-        F.col("doc_id").alias("doc_f"),
-        "shingle",
-        F.col("n").alias("nf"),
-        (F.col("idx") + 1).alias("rnf"),
-    )
-    cand = prefix.join(full, "shingle").filter(F.col("doc_p") != F.col("doc_f"))
-    if positional:
-        cand = cand.filter(
-            F.lit(10)
-            * (F.lit(1) + F.least(F.col("np") - F.col("rnp"), F.col("nf") - F.col("rnf")))
-            >= F.lit(9) * F.least("np", "nf")
-        )
-    cand = cand.select(
-        F.least("doc_p", "doc_f").alias("doc_a"),
-        F.greatest("doc_p", "doc_f").alias("doc_b"),
-    ).distinct()
-    scored = _pair_intersections(cand, oarr).select(
-        "doc_a",
-        "doc_b",
-        (F.col("n_inter").cast("double") / F.col("na")).alias("contain_a"),
-        (F.col("n_inter").cast("double") / F.col("nb")).alias("contain_b"),
-    )
-    return cand, release_with(
-        scored.filter(
-            (F.col("contain_a") >= CONTAIN_THRESHOLD)
-            | (F.col("contain_b") >= CONTAIN_THRESHOLD)
-        ),
-        oarr,
-        arrs,
-    )
 
 
 EMB_REP = int(os.environ.get("SKEW_EMB_REP", "400"))
@@ -1107,240 +657,6 @@ def main_simhash_truth_regime(spark, qs) -> None:
     }), flush=True)
 
 
-def main_triangle_micro() -> None:
-    """r10: the triangle census was the fifth banding-class candidate —
-    ``dupgraph_triangle_stats``' id-ordered node-iterator fans every
-    node out by in_deg * out_deg, which is Theta(hub^2) join rows on a
-    hub-skewed pair graph (the boilerplate-doc shape: one document
-    near-dup to everything) even when ZERO triangles exist.  The r10
-    rewrite orients edges by (degree, id) rank, capping each edge's
-    fan-out at its lower-degree endpoint (Suri-Vassilvitskii).
-
-    This micro builds synthetic edge lists (the census core is
-    graph-in/stats-out, so the twin can be the graph itself):
-
-    - hub twins at increasing hub degree + 1e6 uniform background
-      edges: the OLD core is timed while it can finish and its join
-      mass is recorded analytically where it cannot (in*out of the
-      hub), the NEW core runs everywhere;
-    - a 600-clique + background twin: C(600,3) = 3.58e7 wedges are all
-      real triangles — the irreducible-output regime where both cores
-      must pay the same term (no-regression check);
-    - identity: both cores return the same count on every twin they
-      both complete."""
-    from pyspark.sql import functions as F
-
-    spark = get_spark(
-        app_name="measure_scaling_triangle",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    all_queries()  # registry-ordered imports (graph composes dedup's oracle)
-    from osm2orc_spark.operators.graph import _triangle_count_degree_ordered
-
-    par = spark.sparkContext.defaultParallelism
-
-    def old_core(e):
-        e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-        e3 = e.select(F.col("a").alias("ta"), F.col("b").alias("tc"))
-        return (
-            e.join(e2, "b")
-            .join(e3, (F.col("a") == F.col("ta")) & (F.col("c") == F.col("tc")))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
-        )
-
-    def background(n_nodes: int, n_edges: int):
-        # deterministic pseudo-random sparse edges, id-canonicalized
-        x = (F.xxhash64(F.col("id"), F.lit(1)) % n_nodes + n_nodes) % n_nodes
-        y = (F.xxhash64(F.col("id"), F.lit(2)) % n_nodes + n_nodes) % n_nodes
-        return (
-            spark.range(n_edges)
-            .select(F.least(x, y).alias("a"), F.greatest(x, y).alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    n_nodes = 2_000_000
-    hub = n_nodes // 2  # mid-range id: id-ordering splits in/out evenly
-    bg = background(n_nodes, 1_000_000).persist()
-    bg.count()
-
-    def run(core, e, deg=None):
-        if deg is None:
-            und = e.unionByName(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-        t0 = time.perf_counter()
-        n_tri = (
-            core(e) if core is old_core else _triangle_count_degree_ordered(e, deg)
-        ).collect()[0]["n_triangles"]
-        return time.perf_counter() - t0, n_tri
-
-    for hub_deg in (10_000, 30_000, 1_000_000):
-        # spokes CENTERED on the hub id: half the neighbors sort below
-        # it and half above, so the id-ordering gives the hub in ~ out
-        # ~ hub_deg/2 and the in*out fan-out the micro exists to price
-        # (a one-sided id range would leak every spoke into in-degree
-        # and hide the quadratic term)
-        spokes = spark.range(hub_deg + 1).select(
-            (F.lit(hub) - F.lit(hub_deg // 2) + F.col("id")).alias("s")
-        ).filter(F.col("s") != hub).select(
-            F.least(F.lit(hub), F.col("s")).alias("a"),
-            F.greatest(F.lit(hub), F.col("s")).alias("b"),
-        )
-        e = bg.unionByName(spokes).distinct().repartition(par).persist()
-        n_e = e.count()
-        # analytic id-ordered join mass: sum over nodes of in*out
-        mass = (
-            e.select(F.col("b").alias("n")).groupBy("n")
-            .agg(F.count(F.lit(1)).alias("i"))
-            .join(
-                e.select(F.col("a").alias("n")).groupBy("n")
-                .agg(F.count(F.lit(1)).alias("o")),
-                "n",
-            )
-            .agg(F.sum(F.col("i") * F.col("o"))).collect()[0][0]
-        )
-        rec = {"micro": "triangle_hub_xl", "round": 10, "edges": n_e,
-               "hub_degree": hub_deg, "id_ordered_join_rows_analytic": int(mass)}
-        new_wall, new_tri = run(None, e)
-        rec["degree_ordered_wall_sec"] = round(new_wall, 3)
-        rec["n_triangles"] = new_tri
-        if mass <= 3_000_000_000:  # old shape runnable below ~3e9 rows
-            old_wall, old_tri = run(old_core, e)
-            rec["id_ordered_wall_sec"] = round(old_wall, 3)
-            rec["identical"] = old_tri == new_tri
-        else:
-            rec["id_ordered_wall_sec"] = None
-            rec["note"] = ("id-ordered shape not run: analytic join mass "
-                           "is in the measured DNF class (r8 LSH DNF'd at "
-                           "1.19e10 rows / 590s)")
-        print(json.dumps(rec), flush=True)
-        e.unpersist()
-    # clique regime: irreducible output, both cores pay C(600,3)
-    from itertools import combinations
-
-    clique_edges = [(a, b) for a, b in combinations(range(3_000_000, 3_000_600), 2)]
-    cl = spark.createDataFrame(clique_edges, "a long, b long")
-    e = bg.unionByName(cl).distinct().repartition(par).persist()
-    n_e = e.count()
-    new_wall, new_tri = run(None, e)
-    old_wall, old_tri = run(old_core, e)
-    print(json.dumps({
-        "micro": "triangle_clique_xl", "round": 10, "edges": n_e,
-        "clique": 600, "n_triangles": new_tri,
-        "degree_ordered_wall_sec": round(new_wall, 3),
-        "id_ordered_wall_sec": round(old_wall, 3),
-        "identical": old_tri == new_tri,
-        "note": "irreducible-output regime: every C(600,3)=3.58e7 wedge "
-                "IS a triangle; degree-ordering must not regress here",
-    }), flush=True)
-    spark.stop()
-
-
-def main_fuzzy_micro() -> None:
-    """r10: fuzzy_name_match's r1-r9 join was equi ONLY on blk — the
-    rank band was a RESIDUAL predicate, evaluated by sort-merge on
-    every intra-block pair: Theta(block^2) comparisons at any scale,
-    plus one unsplittable rank window per block.  TPC-H part names
-    have ~92 first-word blocks, so the registered query was secretly
-    Theta(n^2/92).  The r10 rewrite banding (bucket = (rn-1) div W as
-    an equi key, probe side exploded to {bucket, bucket-1}) does
-    Theta(n*W) join work on W-row groups, and the split-and-stitch
-    block rank removes the per-block window straggler.
-
-    Twin: n parts ALL in one block ('common <salted words>') — the
-    hot-block worst case.  The OLD shape is timed while its pair mass
-    is runnable and recorded analytically (block^2) where it is not;
-    the NEW shape runs everywhere; identity is asserted wherever both
-    complete."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
-    spark = get_spark(
-        app_name="measure_scaling_fuzzy",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
-    from osm2orc_spark.operators.dedup import FUZZY_MAX_LEV, SNM_WINDOW
-
-    def old_shape(sf_dir):
-        from osm2orc_spark.tables import load
-
-        part = load(spark, sf_dir, "part")
-        t = part.select(
-            "p_partkey", "p_name", F.split("p_name", " ").getItem(0).alias("blk")
-        ).withColumn(
-            "rn",
-            F.row_number().over(W.partitionBy("blk").orderBy("p_name", "p_partkey")),
-        )
-        a = t.select(F.col("p_partkey").alias("part_a"),
-                     F.col("p_name").alias("name_a"), "blk",
-                     F.col("rn").alias("rn_a"))
-        b = t.select(F.col("p_partkey").alias("part_b"),
-                     F.col("p_name").alias("name_b"), "blk",
-                     F.col("rn").alias("rn_b"))
-        lev = F.levenshtein("name_a", "name_b")
-        return (
-            a.join(b, (a.blk == b.blk) & (F.col("rn_b") - F.col("rn_a") >= 1)
-                   & (F.col("rn_b") - F.col("rn_a") <= SNM_WINDOW))
-            .filter(lev <= FUZZY_MAX_LEV)
-        )
-
-    for n in (10_000, 100_000, 1_150_000):
-        twin = os.path.join(SKEW_DIR, f"fuzzy_hotblk_{n}")
-        marker = os.path.join(twin, "_BUILT_v2")
-        if not os.path.exists(marker):
-            os.makedirs(twin, exist_ok=True)
-            # ids pair up (id DIV 2): both names share the salt, the
-            # final token differs by ONE char — every pair is adjacent
-            # in the block's sort order at lev 1, so out_rows ~ n/2 and
-            # the old-vs-new identity check compares REAL matches, not
-            # two empty sets; cross-pair names differ in every salted
-            # word (lev >> 4).
-            pairc = (F.col("id") / 2).cast("long").cast("string")
-            salt = [
-                F.substring(F.md5(F.concat(pairc, F.lit(f"w{j}"))), 1, 6)
-                for j in range(4)
-            ]
-            tail = F.when((F.col("id") % 2) == 0, F.lit("x")).otherwise(F.lit("y"))
-            spark.range(n).select(
-                F.col("id").alias("p_partkey"),
-                F.concat_ws(" ", F.lit("common"), *salt, tail).alias("p_name"),
-            ).repartition(spark.sparkContext.defaultParallelism).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(twin, "part.parquet"))
-            with open(marker, "w") as fh:
-                fh.write("ok\n")
-        rec = {"micro": "fuzzy_snm_xl", "round": 10, "parts": n,
-               "hot_block_rows": n,
-               "old_pair_comparisons_analytic": n * n}
-        t0 = time.perf_counter()
-        n_new = qs["fuzzy_name_match"].fn(spark, twin).count()
-        rec["banded_wall_sec"] = round(time.perf_counter() - t0, 3)
-        rec["out_rows"] = n_new
-        if n * n <= 2e8:  # the one-block residual join is a SINGLE SMJ
-            # task; a 9e8-comparison 30k run was killed after 31 min
-            # (Catalyst merges the levenshtein filter into the join
-            # condition, so every quadratic pair pays edit distance)
-            t0 = time.perf_counter()
-            n_old = old_shape(twin).count()
-            rec["residual_band_wall_sec"] = round(time.perf_counter() - t0, 3)
-            rec["identical"] = n_old == n_new
-        else:
-            rec["residual_band_wall_sec"] = None
-            rec["note"] = ("residual-band shape not run: the one-block "
-                           "band residual is a single SMJ task and "
-                           "Catalyst merges the levenshtein filter into "
-                           "the join condition — a 9e8-comparison 30k "
-                           "twin was killed at 31 min, so "
-                           f"{n*n:.1e} comparisons is the DNF class")
-        print(json.dumps(rec), flush=True)
-    spark.stop()
-
-
 def main_decon_micro() -> None:
     """r10 scale-killer #7: curation_decontaminate /
     curation_contamination_report's flat train x test shingle equi-join
@@ -1648,49 +964,6 @@ def main_pack_micro() -> None:
     spark.stop()
 
 
-def main_scd2_paired() -> None:
-    """r10 (r9 verdict #2): retire the scd2 2.09x-vs-1.69x ambiguity with
-    ONE clean paired measurement — same session, interleaved base+hot
-    passes, min-of-7 — on the 120x twin.  The r9 sweep's 2.09x line came
-    from a 1.607 s base wall (the best base seen all round) against a
-    separately-sessioned hot wall; the steady-state record said 1.69 on
-    a 1.94 s base.  Interleaving base and hot within one session makes
-    both walls see the same host-load regime, so the ratio is finally a
-    property of the PLAN, not of which minute the denominator ran in."""
-    spark = get_spark(
-        app_name="measure_scaling_scd2",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    dirs = _build_xl_data(spark)
-    fn = all_queries()["scd2_user_value_bands"].fn
-    passes = int(os.environ.get("SCD2_PASSES", "7"))
-    walls: dict[str, list[float]] = {"xl_base": [], "xl_hot": []}
-    # one warm pass per twin (also pays the memoized strategy probe)
-    for mode in ("xl_base", "xl_hot"):
-        fn(spark, dirs[mode]).count()
-    for _ in range(passes):
-        for mode in ("xl_base", "xl_hot"):  # interleaved: same load regime
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, dirs[mode]).count()
-            walls[mode].append(time.perf_counter() - t0)
-    base, hot = min(walls["xl_base"]), min(walls["xl_hot"])
-    from osm2orc_spark.operators import switches
-
-    print(json.dumps({
-        "micro": "xl_event_windows_scd2_paired", "round": 10,
-        "query": "scd2_user_value_bands", "xl_rep": XL_REP,
-        "passes": passes, "protocol": "same-session interleaved min-of-7",
-        "base_sec": round(base, 3), "skew_sec": round(hot, 3),
-        "skew_ratio": round(hot / base, 2),
-        "base_all": [round(w, 3) for w in walls["xl_base"]],
-        "hot_all": [round(w, 3) for w in walls["xl_hot"]],
-        "strategy_hot": switches.window_strategy(spark, dirs["xl_hot"])[0],
-    }), flush=True)
-    spark.stop()
-
-
 def main_streaming_micro() -> None:
     """Measure the Structured Streaming surface on the 40x XL event
     twins (4M rows; xl_hot holds 2M rows on ONE user) — the one runtime
@@ -1903,57 +1176,6 @@ def main_components_micro() -> None:
         n_match = uf.join(fx, ["doc_id", "component"]).count()
         rec["rows"] = n_uf
         rec["identical"] = bool(n_uf == n_fx == n_match)
-        print(json.dumps(rec), flush=True)
-    spark.stop()
-
-
-def main_positional_micro() -> None:
-    """A/B of the r8 PPJoin POSITIONAL filter (Xiao et al.'s second
-    bound): candidate pairs, end-to-end wall, and output identity, with
-    the filter on vs off and every other shape pinned.  Run on the
-    xl_hot twin (hot boilerplate shingle, df 10^5) and sf0.1."""
-    spark = get_spark(
-        app_name="measure_scaling_positional",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    dirs = _build_xl_data(spark)
-    only = os.environ.get("POSITIONAL_QUERY")  # run one query per process
-    for qname, builder in (
-        ("dedup_ppjoin", _ppjoin_variant),
-        ("dedup_containment_ppjoin", _containment_variant),
-    ):
-        if only and qname != only:
-            continue
-        rec: dict = {
-            "micro": "ppjoin_positional_filter",
-            "round": 8,
-            "query": qname,
-            "xl_rep": XL_REP,
-        }
-        for sf_tag, sf_dir in (("xl_hot", dirs["xl_hot"]), ("sf0.1", BASE_SF)):
-            for tag, positional in (("off", False), ("on", True)):
-                walls = []
-                for _ in range(XL_PASSES + 1):  # first pass is warm-up
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    builder(spark, sf_dir, positional)[1].write.format(
-                        "noop"
-                    ).mode("overwrite").save()
-                    walls.append(time.perf_counter() - t0)
-                spark.catalog.clearCache()
-                rec[f"{sf_tag}_cand_{tag}"] = builder(spark, sf_dir, positional)[
-                    0
-                ].count()
-                rec[f"{sf_tag}_wall_{tag}_min_sec"] = round(min(walls[1:]), 3)
-            spark.catalog.clearCache()
-            off = builder(spark, sf_dir, False)[1]
-            on = builder(spark, sf_dir, True)[1]
-            rec[f"{sf_tag}_identical"] = (
-                off.exceptAll(on).count() == 0 and on.exceptAll(off).count() == 0
-            )
-            rec[f"{sf_tag}_cand_cut_pct"] = round(
-                100.0 * (1 - rec[f"{sf_tag}_cand_on"] / rec[f"{sf_tag}_cand_off"]), 1
-            )
         print(json.dumps(rec), flush=True)
     spark.stop()
 
@@ -3117,21 +2339,14 @@ def main_knn_micro() -> None:
 if __name__ == "__main__":
     args = set(sys.argv[1:])
     known = {
-        "--df-crossover",
-        "--rank-crossover",
         "--skew-xl",
         "--skew",
-        "--positional-micro",
         "--components-micro",
         "--streaming-micro",
         "--ann-micro",
-        "--event-windows",
         "--trigger-scaling",
         "--banding-xl",
-        "--scd2-paired",
         "--streaming-rocksdb",
-        "--triangle-micro",
-        "--fuzzy-micro",
         "--decon-micro",
         "--pack-micro",
         "--dim-windows",
@@ -3147,34 +2362,20 @@ if __name__ == "__main__":
     if args - known:
         # Unknown flags must NOT fall through to the (long) default run.
         sys.exit(f"unknown args {sorted(args - known)}; known: {sorted(known)}")
-    if "--df-crossover" in args:
-        main_df_crossover()
-    elif "--rank-crossover" in args:
-        main_rank_crossover()
-    elif "--skew-xl" in args:
+    if "--skew-xl" in args:
         main_skew_xl()
-    elif "--positional-micro" in args:
-        main_positional_micro()
     elif "--components-micro" in args:
         main_components_micro()
     elif "--streaming-micro" in args:
         main_streaming_micro()
     elif "--ann-micro" in args:
         main_ann_micro()
-    elif "--event-windows" in args:
-        main_event_windows()
     elif "--trigger-scaling" in args:
         main_trigger_scaling()
     elif "--banding-xl" in args:
         main_banding_xl()
-    elif "--scd2-paired" in args:
-        main_scd2_paired()
     elif "--streaming-rocksdb" in args:
         main_streaming_rocksdb()
-    elif "--triangle-micro" in args:
-        main_triangle_micro()
-    elif "--fuzzy-micro" in args:
-        main_fuzzy_micro()
     elif "--decon-micro" in args:
         main_decon_micro()
     elif "--pack-micro" in args:

@@ -404,8 +404,8 @@ def _assert_bounded_rank_cap(plan: str, group: str) -> None:
     # task (the window analogue of map-side combine), so the hot
     # group's partition is bounded by cap*tasks, never by its data
     # size. A bare quota-column filter gets NO pruning and sorts the
-    # whole hot group in one unsplittable task — the shape
-    # scripts/measure_scaling.py --rank-crossover records as the loser.
+    # whole hot group in one unsplittable task — the ``window_quota``
+    # shape of the rank_cap_crossover records in SCALING_SKEW.jsonl.
     assert f"windowspecdefinition({group}" in plan
     assert plan.count("WindowGroupLimit") >= 2  # partial + final
 

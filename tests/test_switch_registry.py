@@ -159,6 +159,7 @@ def test_below_threshold_plan_pin(spark, sf_correctness, name, monkeypatch):
         monkeypatch.setattr(switches, "FANOUT_SPLIT_FACTOR", big)
         monkeypatch.setattr(switches, "TOKENIZE_PERSIST_MIN_DOCS", big)
         monkeypatch.setattr(similarity, "LSH_BUCKET_CAP", big)
+        monkeypatch.setattr(similarity, "SEMDEDUP_KSCALE_MIN_VECTORS", big)
         monkeypatch.setattr(ann_index, "KNN_SCALE_ROWS_MAX", big)
         cold = _normalize_plan(
             fn(spark, sf_correctness)._jdf.queryExecution().executedPlan().toString()
