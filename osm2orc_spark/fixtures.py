@@ -3,8 +3,8 @@
 Three artifacts, all seed-deterministic:
 - planet / planet_history / changesets rows (FIXTURES.md §1-2 edge cases:
   NaN-coord nodes, empty tags, 0-nd ways, 2000+-nd ways, role '', open /
-  anonymous / bbox-less changesets, full-7-decimal bboxes, Liberty Island
-  constants from reference README.md:238-241, JOSM created_by values,
+  anonymous / bbox-less changesets, full-7-decimal bboxes, bboxes inside the
+  Liberty Island box of reference README.md:238-241, JOSM created_by values,
   multi-version history with deletes)
 - fixtures/tiny.osm.pbf + changesets.osm.xml raw-ingest files (§3)
 - parquet copies under fixtures/ for the DuckDB oracle to read.
@@ -18,19 +18,9 @@ from __future__ import annotations
 import random
 from decimal import Decimal
 
-# Liberty Island constants (reference README.md:238-241)
-LIBERTY = {
-    "min_lon": "-74.0474545",
-    "max_lon": "-74.0433990",
-    "min_lat": "40.6884971",
-    "max_lat": "40.6911817",
-}
-
 BBOX = ("-74.06", "40.68", "-74.03", "40.70")  # left, bottom, right, top
 
-TAG_KEYS = ["highway", "tracktype", "name", "building", "surface"]
 CREATED_BY = ["JOSM/1.5", "JOSM/1.8", "iD 2.0", "Potlatch 2", "JOSM"]
-USERS = ["alice", "bob", "carol", None]
 
 
 def _coord(rng: random.Random, lo: float, hi: float) -> str:

@@ -480,8 +480,8 @@ def _pack_sequences_chunked(docs: DataFrame) -> DataFrame:
     and the exclusive prefix of any row is (all rows of prior chunks) +
     (in-chunk exclusive prefix).  NULL n_tokens: the flat spelling is
     COALESCE(SUM(n_tokens) [ignores NULLs], 0), which equals summing
-    coalesce(n_tokens, 0) everywhere — so unlike chunked_running_sum no
-    non-null bookkeeping is needed; the outer COALESCE already collapses
+    coalesce(n_tokens, 0) everywhere — so no running non-null count is
+    needed; the outer COALESCE already collapses
     the all-NULL-prefix case to 0."""
     d = docs.withColumn(
         "_chunk", F.floor(F.col("doc_id") / F.lit(PACK_CHUNK_DOCS)).cast("bigint")

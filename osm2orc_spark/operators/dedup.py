@@ -276,19 +276,13 @@ def _jaccard_pairs_arrays(
     )
 
 
-def _jaccard_pairs(
-    cand: DataFrame, sh: DataFrame, threshold: float, sizes: DataFrame | None = None
-) -> DataFrame:
+def _jaccard_pairs(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard for candidate (doc_a, doc_b) pairs from an EXPLODED
     (doc_id, shingle) stream — kept for verification universes that are
     a filtered shingle stream rather than the full per-doc sets (the
     df-capped variants); everything verifying against full sets uses
-    ``_jaccard_pairs_arrays``.
-
-    ``sizes`` lets a caller that already materialized per-doc set sizes
-    reuse that frame instead of re-aggregating the shingle set."""
-    if sizes is None:
-        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    ``_jaccard_pairs_arrays``."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -722,8 +716,6 @@ def dedup_minhash_lsh_dfcap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Duplicate-cluster formation: connected components over near-dup pairs.
 # ---------------------------------------------------------------------------
-_MINHASH_PAIRS_ORACLE_BODY = None  # filled after dedup_minhash_lsh registers
-
 # Hard cap for the driver union-find path: 2^20 directed edges is ~16 MB
 # of (long, long) rows — bounded driver memory at ANY corpus size, the
 # same posture as similarity.MAX_FIT_ROWS. Above it, the distributed
@@ -763,7 +755,6 @@ def dedup_components(
     sf_dir: str,
     *,
     checkpoint: str = "local",
-    collect_max_edges: int = CC_COLLECT_MAX_EDGES,
 ) -> DataFrame:
     if checkpoint not in ("local", "reliable"):
         raise ValueError(f"checkpoint must be 'local' or 'reliable', got {checkpoint!r}")
@@ -801,7 +792,7 @@ def dedup_components(
     # graph. At or under the hard cap, one bounded collect + union-find
     # resolves the identical min-label fixpoint in O(E α(E)) driver time;
     # above it, the loop below scales to any edge count.
-    if n_edges <= collect_max_edges:
+    if n_edges <= CC_COLLECT_MAX_EDGES:
         from pyspark.sql import types as T
 
         parent: dict = {}
@@ -1196,7 +1187,6 @@ def simhash_near_dup_refined(
     spark: SparkSession,
     sf_dir: str,
     *,
-    bucket_cap: int = SIMHASH_BUCKET_CAP,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Scale path for ``simhash_near_dup`` — since r9 the registered
@@ -1271,7 +1261,7 @@ def simhash_near_dup_refined(
     hot = (
         chunks.groupBy("c", "cv")
         .agg(F.count(F.lit(1)).alias("n_bucket"))
-        .filter(F.col("n_bucket") > bucket_cap)
+        .filter(F.col("n_bucket") > SIMHASH_BUCKET_CAP)
         .select("c", "cv")
     )
     cold_keys = chunks.join(F.broadcast(hot), ["c", "cv"], "left_anti").select(
@@ -1530,9 +1520,8 @@ def _chunked_block_rn(
     blk_col: str,
     order_cols: tuple,
     chunk: Column,
-    rn_col: str = "rn",
 ) -> DataFrame:
-    """Per-block row_number by split-and-stitch over an ORDER-ALIGNED
+    """Per-block row_number ``rn`` by split-and-stitch over an ORDER-ALIGNED
     chunk expression — the operators/chunked.py cure applied to string
     sort order instead of event time.
 
@@ -1546,8 +1535,9 @@ def _chunked_block_rn(
     per-chunk summary, bounded by the number of distinct prefixes per
     block, independent of block row count).  Identical to
     row_number() OVER (PARTITION BY blk ORDER BY order_cols) by the
-    same stitch argument as chunked_prev_and_rn; property-tested
-    against the window spelling on adversarial strings."""
+    same stitch argument as the chunked event-time cores;
+    property-tested against the window spelling on adversarial
+    strings."""
     from pyspark.sql.window import Window as W
 
     d = t.withColumn("_chunk", chunk)
@@ -1565,7 +1555,7 @@ def _chunked_block_rn(
     )
     return (
         out.join(summ, [blk_col, "_chunk"])
-        .withColumn(rn_col, F.col("_off") + F.col("_rn"))
+        .withColumn("rn", F.col("_off") + F.col("_rn"))
         .drop("_chunk", "_rn", "_off")
     )
 

@@ -46,16 +46,15 @@ def zorder_key(a: Column, b: Column) -> Column:
     return z
 
 
-def znorm(col: str, mn: str, mx: str, bits: int = Z_NORM_BITS) -> Column:
-    """Min/max-normalize an integer column to a [0, 2^bits) rank so both
-    interleaved dimensions contribute equally significant bits — raw
+def znorm(col: str, mn: str, mx: str) -> Column:
+    """Min/max-normalize an integer column to a [0, 2^Z_NORM_BITS) rank
+    so both interleaved dimensions contribute equally significant bits — raw
     interleave lets the wider-range dimension's high bits dominate the
     sort and the narrow dimension never clusters. Integer-exact:
-    ((x - mn) << bits) DIV (mx - mn + 1). Takes column NAMES (the SQL
-    DIV operator has no Column-API equivalent)."""
-    return F.expr(
-        f"CAST((({col} - {mn}) * {1 << bits}) DIV ({mx} - {mn} + 1) AS BIGINT)"
-    )
+    ((x - mn) << Z_NORM_BITS) DIV (mx - mn + 1). Takes column NAMES (the
+    SQL DIV operator has no Column-API equivalent)."""
+    scale = 1 << Z_NORM_BITS
+    return F.expr(f"CAST((({col} - {mn}) * {scale}) DIV ({mx} - {mn} + 1) AS BIGINT)")
 
 
 def _duck_zexpr(a: str, b: str) -> str:

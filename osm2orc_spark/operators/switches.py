@@ -148,38 +148,15 @@ def cached_probe(sf_dir: str, probe: str, compute) -> int | tuple:
     return _PROBE_CACHE[key]
 
 
-def max_key_rows(
-    spark: SparkSession, sf_dir: str, table: str = "events", key: str = "user_id"
-) -> int:
-    """Largest per-key row count in ``table`` — the straggler probe for
-    PARTITION BY ``key`` windows.  One narrow scan (column pruning keeps
-    it to the key column) + a map-side-combinable groupBy; memoized, so
-    all window-family queries in a process share a single probe job."""
-
-    def _compute() -> int:
-        row = (
-            load(spark, sf_dir, table)
-            .groupBy(key)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("m"))
-            .first()
-        )
-        return row["m"] or 0
-
-    return cached_probe(sf_dir, f"max_key_rows:{table}:{key}", _compute)
-
-
-def hot_key_list(
-    spark: SparkSession, sf_dir: str, table: str = "events", key: str = "user_id"
-) -> tuple[int, ...]:
-    """The keys of ``table`` holding more than HOT_KEY_ROWS rows, capped
-    at HOT_KEY_MAX_LIST + 1 entries (the +1 lets callers detect
-    overflow and fall back to the all-chunked plan).  Same single
-    narrow-scan probe shape as :func:`max_key_rows`; memoized per
-    (dir, threshold) — the threshold is part of the cache key because
-    tests monkeypatch it."""
-    threshold = HOT_KEY_ROWS
-    probe = f"hot_keys:{table}:{key}:{threshold}"
+def hot_key_list(spark: SparkSession, sf_dir: str) -> tuple[int, ...]:
+    """The ``events`` user_ids holding more than HOT_KEY_ROWS rows,
+    capped at HOT_KEY_MAX_LIST + 1 entries (the +1 lets callers detect
+    overflow and fall back to the all-chunked plan).  One narrow scan
+    (column pruning keeps it to the key column) + a map-side-combinable
+    groupBy; memoized per (dir, threshold) — the threshold is part of
+    the cache key because tests monkeypatch it."""
+    key, threshold = "user_id", HOT_KEY_ROWS
+    probe = f"hot_keys:events:{key}:{threshold}"
 
     def _compute() -> tuple:
         # NULL keys are excluded BEFORE the limit (a NULL row must not
@@ -192,7 +169,7 @@ def hot_key_list(
         # real keys (a NULL-hot stream is a data-quality bug upstream
         # of any engine strategy).
         rows = (
-            load(spark, sf_dir, table)
+            load(spark, sf_dir, "events")
             .filter(F.col(key).isNotNull())
             .groupBy(key)
             .agg(F.count(F.lit(1)).alias("n"))
@@ -209,7 +186,7 @@ def hot_key_list(
 
 
 def window_strategy(
-    spark: SparkSession, sf_dir: str, table: str = "events", key: str = "user_id"
+    spark: SparkSession, sf_dir: str
 ) -> tuple[str, tuple[int, ...]]:
     """The per-key window family's three-level strategy pick:
 
@@ -222,7 +199,7 @@ def window_strategy(
 
     :func:`per_key_window` applies the pick, NULL-key routing included.
     """
-    hot = hot_key_list(spark, sf_dir, table, key)
+    hot = hot_key_list(spark, sf_dir)
     if not hot:
         return ("window", ())
     if len(hot) > HOT_KEY_MAX_LIST:
@@ -313,15 +290,14 @@ def scan_splits(spark: SparkSession, sf_dir: str, table: str) -> int:
     )
 
 
-def fanout_repartition(
-    spark: SparkSession, sf_dir: str, df, key: str, table: str = "documents"
-):
-    """``df.repartition(defaultParallelism, key)`` IF the ``table`` scan
-    is too few splits to fill the cores, else ``df`` unchanged (the scan
-    is already parallel; adding an Exchange would only move the payload
-    again).  ``df`` must be a plain projection of ``table``'s scan."""
+def fanout_repartition(spark: SparkSession, sf_dir: str, df, key: str):
+    """``df.repartition(defaultParallelism, key)`` IF the ``documents``
+    scan is too few splits to fill the cores, else ``df`` unchanged (the
+    scan is already parallel; adding an Exchange would only move the
+    payload again).  ``df`` must be a plain projection of the documents
+    scan."""
     par = spark.sparkContext.defaultParallelism
-    if scan_splits(spark, sf_dir, table) < FANOUT_SPLIT_FACTOR * par:
+    if scan_splits(spark, sf_dir, "documents") < FANOUT_SPLIT_FACTOR * par:
         return df.repartition(par, key)
     return df
 
@@ -406,7 +382,7 @@ def dim_window_nparts(n_rows: int) -> int:
 # factors until the peak fits the per-task bar (HOT_KEY_ROWS), re-probing
 # at each width (a burst is rarely uniform, so the rescale is iterated,
 # not trusted).  Probes are the same single map-side-combinable agg shape
-# as max_key_rows, memoized per (dir, width) — and they only run when a
+# as hot_key_list, memoized per (dir, width) — and they only run when a
 # chunked core actually resolves a width, i.e. never under the "window"
 # strategy.  Floor: MIN_CHUNK_MS — below ~1 s the residual is same-
 # timestamp ties, which MUST share a chunk (equal sort keys cannot split
@@ -419,23 +395,17 @@ def _next_pow2(x: int) -> int:
     return 1 << max(0, int(x) - 1).bit_length()
 
 
-def peak_chunk_rows(
-    spark: SparkSession,
-    sf_dir: str,
-    width_ms: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-) -> int:
-    """Largest per-(key, time-chunk) row count at ``width_ms`` — the
-    straggler probe for the chunked cores' in-chunk windows.  NULL keys
-    are excluded (they route through the plain window branch)."""
+def peak_chunk_rows(spark: SparkSession, sf_dir: str, width_ms: int) -> int:
+    """Largest per-(user_id, time-chunk) ``events`` row count at
+    ``width_ms`` — the straggler probe for the chunked cores' in-chunk
+    windows.  NULL keys are excluded (they route through the plain
+    window branch)."""
 
     def _compute() -> int:
-        ev = load(spark, sf_dir, table).filter(F.col(key).isNotNull())
-        chunk = F.floor(F.unix_millis(ts) / F.lit(width_ms)).cast("bigint")
+        ev = load(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+        chunk = F.floor(F.unix_millis("ts") / F.lit(width_ms)).cast("bigint")
         row = (
-            ev.groupBy(F.col(key), chunk.alias("_c"))
+            ev.groupBy(F.col("user_id"), chunk.alias("_c"))
             .agg(F.count(F.lit(1)).alias("n"))
             .agg(F.max("n").alias("m"))
             .first()
@@ -443,18 +413,11 @@ def peak_chunk_rows(
         return row["m"] or 0
 
     return cached_probe(
-        sf_dir, f"peak_chunk_rows:{table}:{key}:{ts}:{width_ms}", _compute
+        sf_dir, f"peak_chunk_rows:events:user_id:ts:{width_ms}", _compute
     )
 
 
-def burst_chunk_ms(
-    spark: SparkSession,
-    sf_dir: str,
-    default_ms: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-) -> int:
+def burst_chunk_ms(spark: SparkSession, sf_dir: str, default_ms: int) -> int:
     """The chunk width the time-chunked cores should use for this dir:
     ``default_ms`` when the default-width peak occupancy fits the
     per-task bar (the common case — zero plan change), else the largest
@@ -465,7 +428,7 @@ def burst_chunk_ms(
     bar = max(1, int(HOT_KEY_ROWS))  # tests force the bar to 0/negative
     width = int(default_ms)
     for _ in range(BURST_PROBE_MAX_ITERS):
-        peak = peak_chunk_rows(spark, sf_dir, width, table, key, ts)
+        peak = peak_chunk_rows(spark, sf_dir, width)
         if peak <= bar or width <= MIN_CHUNK_MS:
             break
         shrink = _next_pow2(-(-peak // bar))

@@ -991,23 +991,6 @@ def approx_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def approx_distinct_users_sketch_only(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION shape of approx_distinct_users_by_type: sketch
-    alone, no exact anchor.  The registered twin adds countDistinct +
-    the bounded-invariant contract so the driver's DuckDB oracle can
-    gate it, but that exact anchor dominates cost at scale (full Expand
-    distinct machinery).  This variant is the 100 TB plan the doc cites:
-    mergeable partial HLL++ sketches map-side, one merge per group,
-    constant memory per task regardless of cardinality.  Not registered
-    (HLL values are engine-specific, so there is no value-hash oracle);
-    pinned instead by the plan test asserting NO distinct Expand and a
-    single events scan."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=HLL_RSD).alias("approx_users")
-    )
-
-
 @register(
     "funnel_view_click_purchase",
     oracle="""
@@ -1287,20 +1270,6 @@ def approx_percentiles_value_by_type(spark: SparkSession, sf_dir: str) -> DataFr
         for i, p in enumerate(APPROX_PCTS)
     ]
     return counts.select("event_type", "n_vals", *oks)
-
-
-def approx_percentiles_sketch_only(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION shape of approx_percentiles_value_by_type: the GK
-    sketch alone — partial sketches map-side, one merge per group, ONE
-    shuffle of sketch bytes, no rank-verification join back to events.
-    The registered twin's second full events scan + broadcast join is
-    verification harness only; this is the plan a 100 TB job runs.  Not
-    registered (GK estimates are engine-specific); pinned by the plan
-    test asserting a single events scan and no join."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.percentile_approx("value", list(APPROX_PCTS), APPROX_PCT_ACC).alias("pcts")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -671,8 +671,8 @@ def _islands_chunked_core(ev: DataFrame, chunk_ms: int) -> DataFrame:
     rule: ONE event-level window pass (in-chunk lag + running sum share
     the window), one groupBy down to local runs, the stitch/renumber
     windows over the BOUNDED per-chunk summary, one join back.  The
-    r8 two-primitive composition (chunked_prev then chunked_running_sum)
-    paid two chunk passes + two summary joins and held a 3.3x hot ratio
+    r8 two-primitive composition (a chunked lag, then a chunked running
+    sum) paid two chunk passes + two summary joins and held a 3.3x hot ratio
     at XL; this is the same math with the passes shared.
 
     Exactness: a chunk's first local run fuses with the previous

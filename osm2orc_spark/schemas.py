@@ -126,11 +126,3 @@ CHANGESET_DISCUSSION_SCHEMA = T.StructType(
     list(CHANGESET_SCHEMA.fields)
     + [T.StructField("comments", T.ArrayType(CHANGESET_COMMENT_TYPE))]
 )
-
-PLANET_DDL = (
-    "id BIGINT, type STRING, tags MAP<STRING,STRING>, lat DECIMAL(9,7), "
-    "lon DECIMAL(10,7), nds ARRAY<STRUCT<ref:BIGINT>>, "
-    "members ARRAY<STRUCT<type:STRING,ref:BIGINT,role:STRING>>, "
-    "changeset BIGINT, timestamp TIMESTAMP, uid BIGINT, user STRING, "
-    "version BIGINT, visible BOOLEAN"
-)

@@ -168,9 +168,9 @@ def append_user_metadata_tail(file_path: str, metadata: dict[str, str]) -> None:
     compressed stream is spec-valid — the appendix rides in one original
     chunk, so no codec is even needed.
 
-    Local/posix paths only (opens r+b and truncates); the distributed
-    100 TB path runs this same function as one Spark task per file via
-    ``embed_user_metadata(..., distributed=True)``.  Reference parity:
+    Local/posix paths only (opens r+b and truncates); Hadoop
+    filesystems take the same append through
+    ``append_user_metadata_tail_fs``.  Reference parity:
     the resulting reader view (``OrcFile.createReader .getMetadataKeys``)
     is identical to the reference's writer-time ``addUserMetadata``
     (OsmPbf2Orc.java:90,122-125) — asserted against the JVM reader AND
@@ -269,18 +269,15 @@ def embed_user_metadata(
     spark: SparkSession,
     path: str,
     metadata: dict[str, str],
-    distributed: bool = False,
 ) -> None:
     """Stamp ORC *user metadata* into every ``*.orc`` part file under
     ``path``, matching the reference's ``writer.addUserMetadata`` calls
     (OsmPbf2Orc.java:90,122-125).
 
     Local paths take the O(footer-bytes) surgical tail append
-    (``append_user_metadata_tail`` — no row data touched); with
-    ``distributed=True`` the appends fan out as Spark tasks (pure-Python
-    closure, no py4j) for outputs whose part-file count makes even a
-    ~1 ms/file driver loop sequential-FS-bound — byte-identical results,
-    asserted in tests.  Remote filesystems fall back to a full rewrite
+    (``append_user_metadata_tail`` — no row data touched).  Remote
+    filesystems first try the same tail append through the Hadoop FS
+    truncate/append API; those without it (S3A) fall back to a full rewrite
     through Spark's bundled ``org.apache.orc`` Java API: stream row
     batches reader->writer (schema and compression preserved), re-add
     any existing user metadata, add ours, then atomically swap via the
@@ -316,27 +313,8 @@ def embed_user_metadata(
             for name in sorted(os.listdir(local))
             if name.endswith(".orc") and not name.startswith((".", "_"))
         ]
-        if distributed and len(parts_local) > 1:
-            # One Spark task per slice of part files: the append is pure
-            # Python (no py4j), so it runs on executors as-is.  Requires
-            # the output paths to be visible from every executor (posix-
-            # mounted / shared storage) — the deployment where a 100 TB
-            # output's >10^4 part files make even a 1 ms/file driver loop
-            # plus its sequential FS round-trips worth fanning out.
-            # Determinism: each file is touched by exactly one task, and
-            # the append bytes depend only on (file tail, metadata) —
-            # asserted byte-identical to the driver loop in tests.
-            meta = dict(metadata)
-            sc = spark.sparkContext
-            n_slices = max(1, min(len(parts_local), sc.defaultParallelism))
-            sc.parallelize(parts_local, n_slices).foreachPartition(
-                lambda paths: [
-                    append_user_metadata_tail(p, meta) for p in paths
-                ]
-            )
-        else:
-            for p in parts_local:
-                append_user_metadata_tail(p, metadata)
+        for p in parts_local:
+            append_user_metadata_tail(p, metadata)
         return
     jvm = spark._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()

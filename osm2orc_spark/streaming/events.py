@@ -22,6 +22,8 @@ gap-sessionization case without custom state code.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -186,6 +188,27 @@ def rocksdb_state_conf(bounded_memory_gb: int | None = None) -> dict[str, str]:
     return conf
 
 
+@contextmanager
+def _conf_scope(spark: SparkSession, extra_conf: dict[str, str] | None):
+    """Set ``extra_conf`` on the session for the body of the block, then
+    restore each key's previous value (unset when it had none)."""
+    saved: dict[str, str | None] = {}
+    for k, v in (extra_conf or {}).items():
+        try:
+            saved[k] = spark.conf.get(k)
+        except Exception:
+            saved[k] = None
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def run_to_memory(
     stream_df: DataFrame,
     name: str,
@@ -200,15 +223,7 @@ def run_to_memory(
     ``extra_conf`` (e.g. ``rocksdb_state_conf()``) is applied for the
     duration of the query and restored afterwards — state-store confs are
     read at query start, so this is the per-query scoping mechanism."""
-    spark = stream_df.sparkSession
-    saved: dict[str, str | None] = {}
-    for k, v in (extra_conf or {}).items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with _conf_scope(stream_df.sparkSession, extra_conf):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -219,12 +234,6 @@ def run_to_memory(
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
@@ -247,15 +256,7 @@ def run_checkpointed(
     Same conf-scoping contract as run_to_memory: ``extra_conf`` (e.g.
     ``rocksdb_state_conf()``) applies for the query's lifetime and is
     restored afterwards."""
-    spark = stream_df.sparkSession
-    saved: dict[str, str | None] = {}
-    for k, v in (extra_conf or {}).items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with _conf_scope(stream_df.sparkSession, extra_conf):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("parquet")
@@ -267,12 +268,6 @@ def run_checkpointed(
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------------------------------
@@ -843,91 +838,4 @@ def stream_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     return run_to_memory(
         scd2_intervals_stream(ev), "stream_scd2_mem", output_mode="update"
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas evaluation (r12 verdict #5): Spark 4's
-# successor to applyInPandasWithState, measured against the stateful
-# ceiling streaming_trigger_scaling recorded (~352k rows/s for the
-# transitions kernel at mFPT=32).  The twin below is the SAME vectorized
-# kernel behind the new handle API: keyed ValueState holds the user's
-# last (ts_us, event_id, event_type); emitted (from, to) steps are
-# bit-identical (tests pin backend identity).  Operationally TWS differs
-# in two ways that matter at 100 TB: it REQUIRES the RocksDB state store
-# (the scale posture rocksdb_state_conf already encodes), and its state
-# schema is declared per-variable with optional TTL — per-key eviction
-# without the timeout-callback dance.  Adoption decision lives with the
-# measured A/B (tws_ab in SCALING_SKEW.jsonl).
-# ---------------------------------------------------------------------------
-def tws_available() -> bool:
-    """Whether transformWithStateInPandas can actually RUN here: beyond
-    the DataFrame API (present since Spark 4.0), its state-server RPC is
-    protobuf — the generated StateMessage_pb2 pins runtime 6.33.0 and
-    the TWS *driver worker* imports it at query start (measured in this
-    container: STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE, ImportError
-    'google.protobuf').  applyInPandasWithState has no such dependency —
-    its state rides the Arrow stream — which is an honest deployment
-    consideration by itself."""
-    try:
-        from pyspark.sql.streaming.proto import StateMessage_pb2  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-def transitions_stream_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas twin of transitions_stream — identical
-    vectorized pair emission, state via the TWS ValueState handle.
-    Requires the RocksDB state store provider (a TWS hard requirement;
-    pass rocksdb_state_conf() to the runner) and a google.protobuf
-    runtime matching StateMessage_pb2 (see tws_available)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class Transitions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState(
-                "last", "last_us long, last_id long, last_type string"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-            import pandas as pd
-
-            prev = self._last.get() if self._last.exists() else None
-            frames = [pdf for pdf in rows]
-            if not frames:
-                return
-            pdf = pd.concat(frames) if len(frames) > 1 else frames[0]
-            # same unit-pinning rule as the applyInPandasWithState twin:
-            # Arrow may deliver [ns] or [us]
-            pdf = pdf.assign(_us=pdf["ts"].astype("datetime64[us]").astype("int64"))
-            pdf = pdf.sort_values(["_us", "event_id"])
-            types = pdf["event_type"].to_numpy()
-            if prev is not None:
-                froms = np.concatenate(([prev[2]], types[:-1]))
-                tos = types
-            else:
-                froms = types[:-1]
-                tos = types[1:]
-            tail = pdf.iloc[-1]
-            self._last.update(
-                (int(tail["_us"]), int(tail["event_id"]), str(tail["event_type"]))
-            )
-            yield pd.DataFrame(
-                {"user_id": key[0], "from_type": froms, "to_type": tos}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        Transitions(),
-        "user_id long, from_type string, to_type string",
-        "update",
-        "none",
     )

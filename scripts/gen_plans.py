@@ -133,16 +133,6 @@ NOTES = {
         "does not dedup subtrees. Measured xl_hot: 1.01x skew ratio, "
         "2.9x faster than the registered spelling on the hot twin."
     ),
-    "embedding_near_dup_lsh_refined": (
-        "Adaptive band refinement (late r8, non-registered scale variant "
-        "of embedding_near_dup_lsh — output-identical below the cap): "
-        "hot level-1 buckets (membership table bounded at 2,048 rows, "
-        "BROADCAST anti/semi joins) extend their join key with the next "
-        "8-bit signature chunk; the candidate equi-join runs on "
-        "(c, cv, cv2) with a -1 sentinel for cold rows. Measured at 800k "
-        "vectors: 8.0e7 join rows vs the registered shape's 1.19e10 "
-        "(which DNFs); 65% recall at cos >= 0.9 on planted pairs."
-    ),
     "simhash_near_dup_refined": (
         "Recursive-pigeonhole SimHash refinement (late r8; since r9 the "
         "registered query's own auto-routed hot path — EXACT at any "
@@ -326,7 +316,6 @@ def main() -> None:
         "",
     ]
     from osm2orc_spark.operators.dedup import simhash_near_dup_refined
-    from osm2orc_spark.operators.similarity import embedding_near_dup_lsh_refined
     from osm2orc_spark.queries.relational import sessionize_events_chunked
 
     from osm2orc_spark.operators import switches
@@ -372,7 +361,6 @@ def main() -> None:
 
     extra = {
         "sessionize_events_chunked": sessionize_events_chunked,
-        "embedding_near_dup_lsh_refined": embedding_near_dup_lsh_refined,
         "simhash_near_dup_refined": simhash_near_dup_refined,
         "curation_decontaminate_factored": _forced(
             "curation_decontaminate", "DECON_FLAT_PAIRS_MAX"

@@ -365,15 +365,15 @@ def _build_xl_embeddings(spark) -> str:
     return mode_dir
 
 
-# embedding_near_dup_lsh (registered) is deliberately absent: its 8-bit
-# band space saturates at this scale (1.19e10 join rows, DNF in 590s —
-# `lsh_bucket_saturation`); the refined variant below is the scale path.
+# embedding_near_dup_lsh saturates its 8-bit band space at this scale
+# (`lsh_bucket_saturation`); its max-bucket probe routes it through the
+# adaptive band refinement, so the registered query is the one timed.
 ANN_XL_QUERIES = (
     "ann_topk_bruteforce",
     "ann_ivf_probe",
     "ann_ivfpq_probe",
     "ann_topk_hamming",
-    "embedding_near_dup_lsh_refined",
+    "embedding_near_dup_lsh",
 )
 
 
@@ -391,13 +391,8 @@ def main_ann_micro() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from osm2orc_spark.operators.similarity import (
-        embedding_near_dup_lsh_refined,
-    )
-
     emb_dir = _build_xl_embeddings(spark)
     qs = all_queries()
-    extra = {"embedding_near_dup_lsh_refined": embedding_near_dup_lsh_refined}
     only = {q for q in os.environ.get("ANN_ONLY", "").split(",") if q}
     for name in ANN_XL_QUERIES:
         if only and name not in only:
@@ -407,7 +402,7 @@ def main_ann_micro() -> None:
         for i in range(XL_PASSES + 1):  # first pass warms
             spark.catalog.clearCache()
             t0 = time.perf_counter()
-            out = qs[name].fn(spark, emb_dir) if name in qs else extra[name](spark, emb_dir)
+            out = qs[name].fn(spark, emb_dir)
             n_out = out.count()
             walls.append(time.perf_counter() - t0)
         print(
@@ -1144,11 +1139,23 @@ def main_components_micro() -> None:
     """Measure dedup_components' two physical strategies on the 40x XL
     twins: the default measured-edge-count switch (bounded driver
     union-find under CC_COLLECT_MAX_EDGES) vs the FORCED distributed
-    min-label fixpoint (collect_max_edges=-1, local checkpoint) — the
-    100 TB path, which until this micro had only sf0.01 identity tests.
-    Records walls (min-of-2 after warm-up), row counts, and set
-    identity between the strategies on each twin."""
-    from osm2orc_spark.operators.dedup import dedup_components
+    min-label fixpoint (dedup.CC_COLLECT_MAX_EDGES = -1 while the plan
+    builds, local checkpoint) — the 100 TB path, which until this micro
+    had only sf0.01 identity tests.  Records walls (min-of-2 after
+    warm-up), row counts, and set identity between the strategies on
+    each twin."""
+    from osm2orc_spark.operators import dedup
+
+    default_cap = dedup.CC_COLLECT_MAX_EDGES
+
+    def build(sf_dir: str, cap: int):
+        # the strategy is picked while the plan builds, so the constant
+        # only needs to hold for the call
+        dedup.CC_COLLECT_MAX_EDGES = cap
+        try:
+            return dedup.dedup_components(spark, sf_dir)
+        finally:
+            dedup.CC_COLLECT_MAX_EDGES = default_cap
 
     spark = get_spark(
         app_name="measure_scaling_components",
@@ -1159,19 +1166,19 @@ def main_components_micro() -> None:
     for mode in ("xl_base", "xl_hot"):
         rec: dict = {"micro": "components_strategies_xl", "round": 9,
                      "mode": mode, "xl_rep": XL_REP}
-        for tag, kw in (("unionfind", {}), ("fixpoint", {"collect_max_edges": -1})):
+        for tag, cap in (("unionfind", default_cap), ("fixpoint", -1)):
             walls = []
             for _ in range(XL_PASSES + 1):  # first pass warms
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
-                dedup_components(spark, dirs[mode], **kw).write.format(
+                build(dirs[mode], cap).write.format(
                     "noop"
                 ).mode("overwrite").save()
                 walls.append(time.perf_counter() - t0)
             rec[f"{tag}_wall_min_sec"] = round(min(walls[1:]), 3)
         spark.catalog.clearCache()
-        uf = dedup_components(spark, dirs[mode])
-        fx = dedup_components(spark, dirs[mode], collect_max_edges=-1)
+        uf = build(dirs[mode], default_cap)
+        fx = build(dirs[mode], -1)
         n_uf, n_fx = uf.count(), fx.count()
         n_match = uf.join(fx, ["doc_id", "component"]).count()
         rec["rows"] = n_uf

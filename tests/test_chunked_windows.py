@@ -17,11 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from osm2orc_spark.operators.chunked import (
-    chunked_prev,
-    chunked_running_last,
-    chunked_running_sum,
-)
+from osm2orc_spark.operators.chunked import chunked_prev, chunked_running_last
 from osm2orc_spark.tables import load
 
 # 1-minute chunks: the sf0.01 event stream spans days, so every user
@@ -45,22 +41,6 @@ def test_chunked_prev_equals_lag(spark, events, chunk_ms):
     got = chunked_prev(
         events, "user_id", ["event_type"], ("ts", "event_id"), chunk_ms
     ).select("user_id", "event_id", F.col("prev_event_type").alias("p"))
-    assert exp.exceptAll(got).count() == 0
-    assert got.exceptAll(exp).count() == 0
-
-
-@pytest.mark.parametrize("chunk_ms", [TINY_CHUNK_MS, 3_600_000])
-def test_chunked_running_sum_equals_window(spark, events, chunk_ms):
-    flag = (F.col("event_type") == "purchase").cast("long")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    exp = events.select("user_id", "event_id", F.sum(flag).over(w).alias("rs"))
-    got = chunked_running_sum(
-        events, "user_id", flag, "rs", ("ts", "event_id"), chunk_ms
-    ).select("user_id", "event_id", "rs")
     assert exp.exceptAll(got).count() == 0
     assert got.exceptAll(exp).count() == 0
 
@@ -121,7 +101,7 @@ def test_chunked_variant_identical_to_registered(
     monkeypatch.setattr(
         switches,
         "burst_chunk_ms",
-        lambda spark, sf_dir, default_ms, *a, **k: chunk_ms or default_ms,
+        lambda spark, sf_dir, default_ms: chunk_ms or default_ms,
     )
     assert switches.window_strategy(spark, sf_correctness)[0] == "chunked"
     chk = fn(spark, sf_correctness)
@@ -161,14 +141,6 @@ _rows = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_chunked_primitives_equal_windows_property(spark, rows, chunk_ms):
-    from pyspark.sql.window import Window as W
-
-    from osm2orc_spark.operators.chunked import (
-        chunked_prev,
-        chunked_running_last,
-        chunked_running_sum,
-    )
-
     df = spark.createDataFrame(
         [(u, ts * 3, i, v, t) for i, (u, ts, v, t) in enumerate(rows)],
         "user_id int, ms long, event_id long, v int, t string",
@@ -179,34 +151,24 @@ def test_chunked_primitives_equal_windows_property(spark, rows, chunk_ms):
         "v",
         "t",
     )
-    from osm2orc_spark.operators.chunked import chunked_prev_and_rn
-
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     wf = w.rowsBetween(W.unboundedPreceding, 0)
     exp = df.select(
         "user_id",
         "event_id",
         F.lag("t").over(w).alias("p"),
-        F.sum("v").over(wf).alias("rs"),
         F.last("v", ignorenulls=True).over(wf).alias("rl"),
-        F.row_number().over(w).alias("rn"),
     ).collect()
     got_p = chunked_prev(df, "user_id", ["t"], ("ts", "event_id"), chunk_ms)
-    got_s = chunked_running_sum(df, "user_id", "v", "rs", ("ts", "event_id"), chunk_ms)
     got_l = chunked_running_last(df, "user_id", ["v"], ("ts", "event_id"), chunk_ms)
-    got_pr = chunked_prev_and_rn(df, "user_id", ["t"], ("ts", "event_id"), chunk_ms)
     by_id = {}
     for r in got_p.collect():
         by_id[r.event_id] = [r.prev_t]
-    for r in got_s.collect():
-        by_id[r.event_id].append(r.rs)
     for r in got_l.collect():
         by_id[r.event_id].append(r.run_v)
-    for r in got_pr.collect():
-        by_id[r.event_id].extend([r.prev_t, r.rn])
     for r in exp:
-        assert by_id[r.event_id] == [r.p, r.rs, r.rl, r.p, r.rn], (
-            r.event_id, by_id[r.event_id], (r.p, r.rs, r.rl, r.rn))
+        assert by_id[r.event_id] == [r.p, r.rl], (
+            r.event_id, by_id[r.event_id], (r.p, r.rl))
 
 
 # --- ghost-replication trailing RANGE frame (r10 scale-killer #12) --------

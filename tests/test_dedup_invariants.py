@@ -155,25 +155,6 @@ def test_containment_ppjoin_supersets_capped_variant(spark, sf_correctness):
         assert max(ca, cb) >= 0.9
 
 
-def test_lsh_refined_identical_below_cap(spark, sf_correctness):
-    """embedding_near_dup_lsh_refined (the scale path for the saturated
-    8-bit banding — `lsh_bucket_saturation` in SCALING_SKEW.jsonl) must
-    be OUTPUT-IDENTICAL to the registered query on any corpus whose
-    level-1 buckets are all under the cap (the driver SFs are: sf0.1's
-    largest bucket is 29 vs cap 256)."""
-    from osm2orc_spark.operators.similarity import (
-        embedding_near_dup_lsh,
-        embedding_near_dup_lsh_refined,
-    )
-
-    reg = embedding_near_dup_lsh(spark, sf_correctness)
-    ref = embedding_near_dup_lsh_refined(spark, sf_correctness)
-    n_reg, n_ref = reg.count(), ref.count()
-    n_both = reg.join(ref, ["vec_a", "vec_b", "cosine"]).count()
-    assert n_reg > 0
-    assert n_reg == n_ref == n_both
-
-
 def test_simhash_refined_exactly_identical(spark, sf_correctness):
     """simhash_near_dup_refined is EXACT at any corpus size (recursive
     pigeonhole — see the docstring); at the driver SFs the hot path is

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from osm2orc_spark.operators import dedup
 from osm2orc_spark.operators.dedup import dedup_components, dedup_ngram_jaccard
 from osm2orc_spark.operators.guards import (
     QUADRATIC_GUARD_MAX_ROWS,
@@ -56,12 +57,14 @@ def test_guard_threshold_admits_gate_scale_tables(spark):
         assert n <= QUADRATIC_GUARD_MAX_ROWS
 
 
-def test_dedup_components_strategies_agree(spark, sf_correctness, tmp_path):
+def test_dedup_components_strategies_agree(
+    spark, sf_correctness, tmp_path, monkeypatch
+):
     """All three physical strategies — bounded driver union-find (the
     default under CC_COLLECT_MAX_EDGES), distributed local-checkpoint
     fixpoint, and distributed reliable-checkpoint fixpoint — converge to
-    the identical min-label assignment.  collect_max_edges=-1 forces the
-    distributed path UNCONDITIONALLY (r6 advice: with =0 and a fixture
+    the identical min-label assignment.  CC_COLLECT_MAX_EDGES = -1 forces
+    the distributed path UNCONDITIONALLY (r6 advice: with =0 and a fixture
     yielding zero LSH pairs, n_edges==0 satisfies 0 <= 0 and the test
     silently compares union-find to itself); the non-singleton assert
     below makes the comparison non-vacuous."""
@@ -71,24 +74,20 @@ def test_dedup_components_strategies_agree(spark, sf_correctness, tmp_path):
     # non-vacuous: the fixture must contain at least one near-dup pair
     # (some component label differs from its doc_id)
     assert any(doc != comp for doc, comp in unionfind)
+    monkeypatch.setattr(dedup, "CC_COLLECT_MAX_EDGES", -1)
     distributed = sorted(
-        map(
-            tuple,
-            dedup_components(spark, sf_correctness, collect_max_edges=-1).collect(),
-        )
+        map(tuple, dedup_components(spark, sf_correctness).collect())
     )
     assert distributed == unionfind
     assert spark.sparkContext.getCheckpointDir() is None
     with pytest.raises(ValueError, match="setCheckpointDir"):
-        dedup_components(
-            spark, sf_correctness, checkpoint="reliable", collect_max_edges=-1
-        )
+        dedup_components(spark, sf_correctness, checkpoint="reliable")
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     reliable = sorted(
         map(
             tuple,
             dedup_components(
-                spark, sf_correctness, checkpoint="reliable", collect_max_edges=-1
+                spark, sf_correctness, checkpoint="reliable"
             ).collect(),
         )
     )

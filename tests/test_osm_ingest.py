@@ -440,37 +440,52 @@ class TestTailMetadataAppend:
         assert meta["k"] == "v1" and meta["k2"] == "v2"
         assert spark.read.orc(out).count() == planet.count()
 
-    def test_distributed_stamp_byte_identical_to_driver_loop(
-        self, spark, planet, tmp_path
+    def test_s3a_rewrite_fallback_stamps_every_part(
+        self, spark, planet, tmp_path, monkeypatch
     ):
-        """embed_user_metadata(distributed=True) fans the tail append out
-        as Spark tasks (the >10^4-part-file posture for a 100 TB output);
-        each part file's bytes must equal the sequential driver loop's —
-        the append depends only on (file tail, metadata), and exactly one
-        task touches each file."""
+        """Filesystems without truncate/append (S3A) take the JVM
+        batch-copy rewrite.  Driven on ``file:`` by reporting an s3a
+        scheme and failing the FS tail append the way S3A does: every
+        part keeps Spark's own writer metadata, gains both keys and its
+        rows, and no temp file outlives the swap."""
         import glob
-        import shutil
+        import os
 
-        from osm2orc_spark.sinks.orc import (
-            embed_user_metadata,
-            read_user_metadata,
-        )
+        import pyarrow.orc as paorc
 
-        src = str(tmp_path / "multi_src")
-        planet.repartition(4).write.mode("overwrite").format("orc").save(src)
-        twin = str(tmp_path / "multi_twin")
-        shutil.copytree(src, twin)
+        from osm2orc_spark.sinks import orc as sink
+
+        def no_append(*_args):
+            raise RuntimeError(
+                "java.lang.UnsupportedOperationException: Not implemented "
+                "by the S3AFileSystem FileSystem implementation"
+            )
+
+        monkeypatch.setattr(sink, "_path_scheme", lambda _p: "s3a")
+        monkeypatch.setattr(sink, "append_user_metadata_tail_fs", no_append)
+        out = str(tmp_path / "s3a_parts")
+        planet.repartition(3).write.mode("overwrite").format("orc").save(out)
+
+        def row_hash():
+            return spark.read.orc(out).selectExpr(
+                "count(*)", "sum(hash(id, type, version))"
+            ).first()
+
+        want = row_hash()
         meta = {"osm.schema.version": "0.6", "bounds": "1, 2, 3, 4"}
-        embed_user_metadata(spark, src, meta)  # sequential driver loop
-        embed_user_metadata(spark, twin, meta, distributed=True)
-        src_parts = sorted(glob.glob(src + "/*.orc"))
-        twin_parts = sorted(glob.glob(twin + "/*.orc"))
-        assert len(src_parts) == len(twin_parts) >= 2
-        for a, b in zip(src_parts, twin_parts):
-            with open(a, "rb") as fa, open(b, "rb") as fb:
-                assert fa.read() == fb.read(), (a, b)
-        assert read_user_metadata(spark, twin)["bounds"] == "1, 2, 3, 4"
-        assert spark.read.orc(twin).count() == planet.count()
+        sink.embed_user_metadata(spark, f"file:{out}", meta)
+        parts = sorted(glob.glob(out + "/*.orc"))
+        assert len(parts) == 3
+        for fp in parts:
+            kv = {
+                k.decode(): v.decode()
+                for k, v in paorc.ORCFile(fp).metadata.items()
+            }
+            assert kv["osm.schema.version"] == "0.6", fp
+            assert kv["bounds"] == "1, 2, 3, 4", fp
+            assert "org.apache.spark.version" in kv, fp
+        assert not [n for n in os.listdir(out) if ".meta.tmp" in n]
+        assert row_hash() == want
 
 
 class TestTailAppendR9:

@@ -617,34 +617,6 @@ def test_duplicate_spans_dup_filter_is_skew_safe_agg(spark, sf_correctness):
     assert "windowspecdefinition(span" not in plan
 
 
-def test_sketch_only_variants_are_single_scan_constant_memory(spark, sf_correctness):
-    """The registered approx-sketch queries carry exact anchors so the
-    DuckDB oracle can gate them; the production 100 TB shape is the
-    sketch alone.  Pin that shape on the non-registered *_sketch_only
-    twins: exactly one events scan, no join, no distinct Expand — the
-    constant-memory mergeable-sketch plan the registered docs cite."""
-    import contextlib
-    import io
-
-    from osm2orc_spark.queries.advanced import (
-        approx_distinct_users_sketch_only,
-        approx_percentiles_sketch_only,
-    )
-
-    for fn in (approx_distinct_users_sketch_only, approx_percentiles_sketch_only):
-        df = fn(spark, sf_correctness)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-        # formatted explain prints each node twice (tree + details), so
-        # ONE physical scan == exactly 2 occurrences
-        assert plan.count("Scan parquet") == 2, fn.__name__
-        assert "Join" not in plan, fn.__name__
-        assert "Expand" not in plan, fn.__name__
-        assert "partial_" in plan, fn.__name__  # map-side partial sketches
-
-
 def test_ivf_assign_is_partial_maxby_not_window(spark, sf_correctness):
     """r7 verdict #6 (as amended r9): the per-vector best-centroid
     assignment must never be a row_number window over the n x k
@@ -683,18 +655,30 @@ def test_dsir_persists_shared_frames(spark, sf_correctness):
     assert "InMemoryRelation" in tree and "Generate" in tree
 
 
-def test_refined_variants_broadcast_hot_tables_no_cartesian(spark, sf_correctness):
-    """The late-r8 refined scale variants: the hot-bucket membership
+def test_refined_variants_broadcast_hot_tables_no_cartesian(
+    spark, sf_correctness, monkeypatch
+):
+    """The late-r8 refined scale paths: the hot-bucket membership
     tables (bounded at 2,048 / 16,384 rows at ANY corpus size) must be
     BROADCAST into the anti/semi routing joins, and no shape may fall
-    back to a cartesian product."""
+    back to a cartesian product.  The LSH side is the registered
+    query's refined branch, reached by seeding its memoized max-bucket
+    probe above the default cap."""
     import contextlib
     import io
+    import os
 
+    from osm2orc_spark.operators import similarity, switches
     from osm2orc_spark.operators.dedup import simhash_near_dup_refined
-    from osm2orc_spark.operators.similarity import embedding_near_dup_lsh_refined
 
-    for fn in (embedding_near_dup_lsh_refined, simhash_near_dup_refined):
+    def lsh_refined(spark, sf_dir):
+        key = (os.path.abspath(sf_dir), "lsh_max_bucket")
+        monkeypatch.setitem(
+            switches._PROBE_CACHE, key, similarity.LSH_BUCKET_CAP + 1
+        )
+        return QUERIES["embedding_near_dup_lsh"].fn(spark, sf_dir)
+
+    for fn in (lsh_refined, simhash_near_dup_refined):
         df = fn(spark, sf_correctness)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):

@@ -437,53 +437,6 @@ def test_scd2_stream_restart_from_checkpoint(spark, sf_smoke, tmp_path):
     assert len(cross) > 0
 
 
-def test_tws_backend_identity_or_documented_unavailability(spark, sf_smoke):
-    """r12 verdict #5: transformWithStateInPandas vs applyInPandasWithState.
-    When the TWS runtime is available the two kernels must emit identical
-    step multisets (same vectorized pair logic behind the two state
-    APIs).  When it is NOT — this container has no google.protobuf and
-    the TWS driver worker hard-imports StateMessage_pb2 (runtime pin
-    6.33.0) at query start — the probe must say so and the documented
-    failure mode must be the real one (the query fails at INIT, not with
-    wrong results)."""
-    import pytest
-
-    from osm2orc_spark.streaming.events import (
-        read_events_stream,
-        rocksdb_state_conf,
-        run_to_memory,
-        transitions_stream,
-        transitions_stream_tws,
-        tws_available,
-    )
-
-    path = f"{sf_smoke}/events.parquet"
-    if not tws_available():
-        with pytest.raises(Exception, match="TransformWithState|protobuf"):
-            run_to_memory(
-                transitions_stream_tws(read_events_stream(spark, path)),
-                "tws_unavail",
-                output_mode="update",
-                extra_conf=rocksdb_state_conf(),
-            ).collect()
-        pytest.skip(
-            "transformWithStateInPandas unavailable: no google.protobuf "
-            "runtime (StateMessage_pb2 pins 6.33.0) — failure mode verified"
-        )
-    a = run_to_memory(
-        transitions_stream(read_events_stream(spark, path)),
-        "tws_id_a",
-        output_mode="update",
-    ).collect()
-    b = run_to_memory(
-        transitions_stream_tws(read_events_stream(spark, path)),
-        "tws_id_b",
-        output_mode="update",
-        extra_conf=rocksdb_state_conf(),
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_pbf_stream_carries_changeset_entities(spark, tmp_path):
     """ChangeSet entities (PrimitiveGroup field 5, the reference TODO's
     entity-table half) flow through the STREAMING ingest path too — the

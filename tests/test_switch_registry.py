@@ -149,7 +149,7 @@ def test_below_threshold_plan_pin(spark, sf_correctness, name, monkeypatch):
         base = _normalize_plan(
             fn(spark, sf_correctness)._jdf.queryExecution().executedPlan().toString()
         )
-        from osm2orc_spark.operators import ann_index
+        from osm2orc_spark.operators import ann_index, dedup
 
         big = 1 << 62
         monkeypatch.setattr(switches, "HOT_KEY_ROWS", big)
@@ -161,6 +161,7 @@ def test_below_threshold_plan_pin(spark, sf_correctness, name, monkeypatch):
         monkeypatch.setattr(similarity, "LSH_BUCKET_CAP", big)
         monkeypatch.setattr(similarity, "SEMDEDUP_KSCALE_MIN_VECTORS", big)
         monkeypatch.setattr(ann_index, "KNN_SCALE_ROWS_MAX", big)
+        monkeypatch.setattr(dedup, "CC_COLLECT_MAX_EDGES", big)
         cold = _normalize_plan(
             fn(spark, sf_correctness)._jdf.queryExecution().executedPlan().toString()
         )

@@ -26,22 +26,18 @@ def _clear_probe_cache():
     switches.probe_cache_clear()
 
 
-def test_max_key_rows_probe(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, i) for i in range(7)] + [(2, i) for i in range(3)],
-        "user_id int, event_id int",
-    ).withColumn("ts", F.timestamp_millis(F.lit(0)))
-    df.write.parquet(str(tmp_path / "events.parquet"))
-    assert switches.max_key_rows(spark, str(tmp_path)) == 7
-    # memoized: a second call answers from the cache (poke the cache to
-    # prove the path is hit, then restore)
-    key = (str(tmp_path), f"max_key_rows:events:user_id")
+def test_table_rows_probe_memoized(spark, tmp_path):
     import os
 
-    key = (os.path.abspath(str(tmp_path)), "max_key_rows:events:user_id")
-    assert switches._PROBE_CACHE[key] == 7
+    df = spark.createDataFrame([(i,) for i in range(10)], "doc_id int")
+    df.write.parquet(str(tmp_path / "documents.parquet"))
+    assert switches.table_rows(spark, str(tmp_path), "documents") == 10
+    # memoized under the ABSOLUTE dir path: a second call answers from
+    # the cache (poke the cache to prove the path is hit)
+    key = (os.path.abspath(str(tmp_path)), "table_rows:documents")
+    assert switches._PROBE_CACHE[key] == 10
     switches._PROBE_CACHE[key] = 99
-    assert switches.max_key_rows(spark, str(tmp_path)) == 99
+    assert switches.table_rows(spark, str(tmp_path), "documents") == 99
 
 
 def test_table_rows_probe(spark, sf_smoke):
@@ -118,63 +114,28 @@ def test_lsh_switch_identity(spark, sf_correctness, monkeypatch):
         assert base_map[(r.vec_a, r.vec_b)] == r.cosine
 
 
-def test_lsh_auto_path_below_cap_identical(spark, sf_correctness):
-    """At the gate SF no bucket exceeds the cap, so the registered query
-    and the probe-free refined spelling agree exactly (the refined plan
-    degenerates to the registered semantics)."""
-    from osm2orc_spark.operators.similarity import embedding_near_dup_lsh_refined
+def test_lsh_auto_path_below_cap_identical(spark, sf_correctness, monkeypatch):
+    """At the gate SF no bucket exceeds the DEFAULT cap, so driving the
+    registered query into its refined branch (memoized max-bucket probe
+    seeded above the cap) reproduces the unrefined output exactly."""
+    import os
+
+    from osm2orc_spark.operators import similarity
     from osm2orc_spark.registry import all_queries
 
-    base = all_queries()["embedding_near_dup_lsh"].fn(spark, sf_correctness)
-    ref = embedding_near_dup_lsh_refined(spark, sf_correctness)
-    assert base.count() == ref.count()
+    fn = all_queries()["embedding_near_dup_lsh"].fn
+    base = fn(spark, sf_correctness)
+    key = (os.path.abspath(sf_correctness), "lsh_max_bucket")
+    assert switches._PROBE_CACHE[key] <= similarity.LSH_BUCKET_CAP
+    monkeypatch.setitem(switches._PROBE_CACHE, key, similarity.LSH_BUCKET_CAP + 1)
+    ref = fn(spark, sf_correctness)
+    # the refined branch really planned: its level-2 band key is present
+    assert "cv2" in ref._jdf.queryExecution().executedPlan().toString()
+    assert "cv2" not in base._jdf.queryExecution().executedPlan().toString()
+    n_base = base.count()
+    assert n_base > 0
+    assert n_base == ref.count()
     assert base.exceptAll(ref.select(*base.columns)).count() == 0
-
-
-def test_chunked_running_sum_null_semantics(spark):
-    """r8 advice (medium): chunked_running_sum must reproduce the
-    unbounded SUM window's NULL semantics exactly — NULL only while the
-    whole prefix is NULL, prior-chunk values carried across an
-    in-chunk all-NULL prefix."""
-    from pyspark.sql.window import Window as W
-
-    from osm2orc_spark.operators.chunked import chunked_running_sum
-
-    # Construct the adversarial shape: chunk 0 has values, chunk 1's
-    # entire prefix is NULL (rows 3,4), a later value (row 5), and user
-    # 2 is all-NULL everywhere (expects NULL throughout).
-    rows = [
-        (1, 0, 10), (1, 1, None), (1, 2, 5),        # chunk 0 (ms 0..2)
-        (1, 61_000, None), (1, 62_000, None),       # chunk 1: all-NULL prefix
-        (1, 63_000, 7),
-        (2, 0, None), (2, 61_000, None),            # all-NULL user
-    ]
-    df = spark.createDataFrame(
-        [(u, ms, v) for u, ms, v in rows], "user_id int, ms long, v int"
-    ).select(
-        "user_id",
-        F.timestamp_millis("ms").alias("ts"),
-        F.col("ms").alias("event_id"),
-        "v",
-    )
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    exp = df.select("user_id", "event_id", F.sum("v").over(w).alias("rs"))
-    got = chunked_running_sum(
-        df, "user_id", "v", "rs", ("ts", "event_id"), 60_000
-    ).select("user_id", "event_id", "rs")
-    assert exp.exceptAll(got).count() == 0
-    assert got.exceptAll(exp).count() == 0
-    # The specific advice scenario: row at ms=61000/62000 (NULL in-chunk
-    # prefix, non-null prior chunks) must carry 15, not NULL.
-    vals = {r.event_id: r.rs for r in got.filter(F.col("user_id") == 1).collect()}
-    assert vals[61_000] == 15 and vals[62_000] == 15 and vals[63_000] == 22
-    assert all(
-        r.rs is None for r in got.filter(F.col("user_id") == 2).collect()
-    )
 
 
 class TestAnnIndexSurface:
