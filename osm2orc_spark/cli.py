@@ -4,7 +4,8 @@ Mirrors the reference entrypoint contract (Osm2Orc.java:12-41):
 - default mode: PBF -> ORC
 - ``--changesets``: changeset XML -> ORC
 - input ``-``: read stdin (staged to a temp file first — Spark sources
-  need a seekable path; Osm2Orc.java:33-36 wraps System.in directly)
+  need a seekable path; Osm2Orc.java:33-36 wraps System.in directly —
+  named ``.bz2`` / ``.gz`` when its magic bytes show that codec)
 - ``--watch``: input is a LANDING DIRECTORY; run the Structured
   Streaming ingest instead of a batch job, appending ORC exactly-once
   as files arrive (the reference pipeline, made continuous — beyond
@@ -39,6 +40,7 @@ import tempfile
 from osm2orc_spark.session import get_spark
 from osm2orc_spark.sinks.orc import write_orc
 from osm2orc_spark.sources.changeset_xml import (
+    codec_suffix,
     read_changesets,
     read_changesets_stream,
     stream_changesets_to_orc,
@@ -118,8 +120,10 @@ def main(argv: list[str] | None = None) -> int:
         return 2
     inp, out = args
     if inp == "-":
-        with tempfile.NamedTemporaryFile(delete=False, suffix=".stdin") as tmp:
-            tmp.write(sys.stdin.buffer.read())
+        data = sys.stdin.buffer.read()
+        suffix = ".stdin" + codec_suffix(data)
+        with tempfile.NamedTemporaryFile(delete=False, suffix=suffix) as tmp:
+            tmp.write(data)
             inp = tmp.name
 
     from pyspark.sql import SparkSession

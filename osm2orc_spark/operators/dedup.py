@@ -28,7 +28,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from osm2orc_spark.operators.cache import release_with, safe_unpersist
 from osm2orc_spark.operators.guards import guard_quadratic

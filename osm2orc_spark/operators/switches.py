@@ -271,7 +271,7 @@ def table_rows(spark: SparkSession, sf_dir: str, table: str) -> int:
 # count: repartition only when the scan cannot fill the cores by
 # itself.  The probe is driver-only metadata (the planned scan's
 # partition count — file listing + split arithmetic, no job), memoized
-# per (dir, table).  Cost of a borderline pick is bounded by CLUSTER
+# per dir.  Cost of a borderline pick is bounded by CLUSTER
 # size, not data size: the repartition only ever fires when the scan
 # holds fewer than FANOUT_SPLIT_FACTOR x defaultParallelism splits,
 # i.e. at most ~parallelism x maxPartitionBytes bytes move.  Routing
@@ -280,13 +280,13 @@ def table_rows(spark: SparkSession, sf_dir: str, table: str) -> int:
 FANOUT_SPLIT_FACTOR = 1
 
 
-def scan_splits(spark: SparkSession, sf_dir: str, table: str) -> int:
-    """Partition count of the planned parquet scan of ``table`` —
+def scan_splits(spark: SparkSession, sf_dir: str) -> int:
+    """Partition count of the planned parquet scan of ``documents`` —
     driver-side split arithmetic only, no Spark job."""
     return cached_probe(
         sf_dir,
-        f"scan_splits:{table}",
-        lambda: load(spark, sf_dir, table).rdd.getNumPartitions(),
+        "scan_splits:documents",
+        lambda: load(spark, sf_dir, "documents").rdd.getNumPartitions(),
     )
 
 
@@ -297,7 +297,7 @@ def fanout_repartition(spark: SparkSession, sf_dir: str, df, key: str):
     payload again).  ``df`` must be a plain projection of the documents
     scan."""
     par = spark.sparkContext.defaultParallelism
-    if scan_splits(spark, sf_dir, "documents") < FANOUT_SPLIT_FACTOR * par:
+    if scan_splits(spark, sf_dir) < FANOUT_SPLIT_FACTOR * par:
         return df.repartition(par, key)
     return df
 

@@ -4,10 +4,11 @@
 Reference behavior being reproduced (not ported): SAX push-parse with an
 element-processor stack (standalone/OsmChangesetXml2Orc.java:92-94,
 parser/ChangesetXmlHandler.java:42-82, parser/ChangesetElementProcessor
-.java:27-74). Spark-first design: one task per input file
-(``binaryFiles``), streaming ``iterparse`` inside the task, raw string
-attributes to a typed DataFrame via declarative casts so Catalyst owns
-every conversion.
+.java:27-74). Spark-first design: Spark's text source cuts the file into
+``<changeset `` records and its own file splits, each task reassembles
+its records into one document for a streaming ``iterparse``, and raw
+string attributes become a typed DataFrame via declarative casts so
+Catalyst owns every conversion.
 
 Cell semantics (SURVEY.md §2B):
 - bbox decimals parsed from STRING, never through double (B4)
@@ -20,10 +21,24 @@ Cell semantics (SURVEY.md §2B):
   throw) — we surface None -> nullable column rather than crashing the
   whole job, which is the distributed-friendly choice.
 
-Scale: files are the split unit (XML is not safely splittable);
-parallelism = number of input files. Planet-scale changeset dumps ship
-as one big .osm.bz2 — split upstream (bzcat | split) or accept one task;
-per-task memory is constant (iterparse + element.clear()).
+Scale: XML escapes ``<`` in attribute values and text, so the string
+``<changeset `` occurs only as a start tag, and every occurrence is a
+place to cut a changeset file.  ``read_changesets`` reads with that
+string as the text source's line separator, so Spark's file-split rule
+sets the task count (4 tasks for a 22.6 MB file on 4 cores) and packs
+small files of a glob into one task.  Plain and ``.bz2`` files split
+(Hadoop decompresses bzip2 per split); ``.gz`` is one task per file.
+Each task rebuilds a run of consecutive records of one split into one
+document: the first record of a file keeps the prolog and ``<osm>``
+root (checked as before), every other run gets a bare ``<osm>`` wrapper,
+and the file's own ``</osm>`` closes the run that holds it.  A run
+without the prolog is read as UTF-8 (the encoding of OSM's changeset
+dumps), so a file whose prolog declares another encoding fails once it
+spans more than one split.  Per-task memory is one Arrow batch of
+records.  A split that falls inside CDATA, a comment or a processing
+instruction leaves a run that does not parse, so the job fails rather
+than mis-splitting.  The streaming reader keeps one task per landed
+file (``binaryFile``).
 """
 
 from __future__ import annotations
@@ -31,7 +46,9 @@ from __future__ import annotations
 import bz2
 import gzip
 import io
+import re
 from collections.abc import Iterator
+from itertools import groupby
 from xml.etree.ElementTree import iterparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,10 +65,21 @@ class NotAChangesetFileError(ValueError):
     """Root element is not <osm> (reference ChangesetXmlHandler.java:57)."""
 
 
+def codec_suffix(data: bytes) -> str:
+    """``.bz2`` / ``.gz`` when ``data`` starts with that codec's magic
+    bytes, else ``""``: the text source picks its codec by file name."""
+    if data[:3] == b"BZh":
+        return ".bz2"
+    if data[:2] == b"\x1f\x8b":
+        return ".gz"
+    return ""
+
+
 def _open_stream(name: str, data: bytes):
-    if name.endswith(".bz2") or data[:3] == b"BZh":
+    codec = codec_suffix(data)
+    if name.endswith(".bz2") or codec == ".bz2":
         return io.BytesIO(bz2.decompress(data))
-    if name.endswith(".gz") or data[:2] == b"\x1f\x8b":
+    if name.endswith(".gz") or codec == ".gz":
         return io.BytesIO(gzip.decompress(data))
     return io.BytesIO(data)
 
@@ -65,9 +93,17 @@ def _long(v: str | None) -> int | None:
 
 def parse_changeset_stream(
     name: str, data: bytes, include_discussion: bool = False
-) -> Iterator[tuple]:
+) -> Iterator[dict]:
+    """Stream rows from one XML file's bytes, decompressing ``.bz2`` /
+    ``.gz`` content (by name or magic bytes) first."""
+    return _changeset_rows(name, _open_stream(name, data), include_discussion)
+
+
+def _changeset_rows(
+    name: str, stream, include_discussion: bool = False
+) -> Iterator[dict]:
     """Stream rows (CHANGESET_RAW_SCHEMA order; + ``comments`` when
-    ``include_discussion``) from one XML file.
+    ``include_discussion``) from one XML document.
 
     Discussion shape (the reference's TODO, OsmPbf2Orc.java:193-195;
     the planet changeset dump's actual element layout):
@@ -77,7 +113,6 @@ def parse_changeset_stream(
     <comment> closes, so reading it lazily at <comment> would see None.
     Zero-comment changesets get an EMPTY list, never NULL (the tags
     convention, B11)."""
-    stream = _open_stream(name, data)
     root_seen = False
     cs_attrs: dict | None = None
     tags: dict[str, str] = {}
@@ -148,16 +183,20 @@ def parse_changeset_stream(
             elem.clear()
 
 
+def _raw_schema(include_discussion: bool):
+    return (
+        CHANGESET_DISCUSSION_RAW_SCHEMA
+        if include_discussion
+        else CHANGESET_RAW_SCHEMA
+    )
+
+
 def _parse_file_batches(include_discussion: bool = False):
     """mapInArrow worker factory over the binaryFile source: each
     (path, content) row parses to one RecordBatch — whole columnar
     batches to the JVM, no per-row pickling (same Arrow path as
     sources/pbf.py)."""
-    raw_schema = (
-        CHANGESET_DISCUSSION_RAW_SCHEMA
-        if include_discussion
-        else CHANGESET_RAW_SCHEMA
-    )
+    raw_schema = _raw_schema(include_discussion)
 
     def worker(batches) -> Iterator:
         import pyarrow as pa
@@ -178,22 +217,80 @@ def _parse_file_batches(include_discussion: bool = False):
     return worker
 
 
+# The text source's record separator: every ``<changeset `` start tag.
+_CHANGESET_OPEN = b"<changeset "
+# A file's last record holds the root's close tag (or an empty root).
+_ROOT_CLOSED = re.compile(rb"</osm\s*>|<osm\b[^>]*/>")
+
+
+def _split_document(records: list[bytes], head: bool) -> bytes:
+    """One document from consecutive records of one file split.  With
+    ``head``, ``records[0]`` is the file's first record (prolog and
+    ``<osm ...>`` root); otherwise a bare ``<osm>`` opens the run.  A run
+    that does not hold the file's last record gets a ``</osm>``."""
+    doc = _CHANGESET_OPEN.join(records)
+    if not head:
+        doc = b"<osm>" + _CHANGESET_OPEN + doc
+    if not _ROOT_CLOSED.search(records[-1]):
+        doc += b"</osm>"
+    return doc
+
+
+def _parse_split_batches(include_discussion: bool = False):
+    """mapInArrow worker factory over the text source's (record, path,
+    start) rows: each run of consecutive records of one file split in an
+    Arrow batch parses as one document to one RecordBatch."""
+    raw_schema = _raw_schema(include_discussion)
+
+    def worker(batches) -> Iterator:
+        import pyarrow as pa
+
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(raw_schema)
+        last = None
+        for batch in batches:
+            cols = batch.to_pydict()
+            rows = zip(cols["path"], cols["start"], cols["record"])
+            for key, run in groupby(rows, key=lambda r: r[:2]):
+                path, start = key
+                records = [r[2] for r in run]
+                head = start == 0 and key != last
+                last = key
+                if head and codec_suffix(records[0]):
+                    raise NotAChangesetFileError(
+                        f"{path}: bzip2/gzip content without a .bz2/.gz name"
+                    )
+                doc = _split_document(records, head)
+                out = list(_changeset_rows(path, io.BytesIO(doc), include_discussion))
+                if out:
+                    yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+
+    return worker
+
+
 def read_changesets(
     spark: SparkSession, path: str, include_discussion: bool = False
 ) -> DataFrame:
-    """Read changeset XML file(s) at ``path`` (glob ok; .xml/.gz/.bz2).
+    """Read changeset XML file(s) at ``path`` (glob ok; .xml/.gz/.bz2),
+    split across tasks at ``<changeset `` start tags.
 
     ``include_discussion`` (opt-in — the reference's TODO surface,
     OsmPbf2Orc.java:193-195) appends ``comments
     ARRAY<STRUCT<date TIMESTAMP, uid BIGINT, user STRING, text STRING>>``;
     the default output schema is unchanged."""
-    raw_schema = (
-        CHANGESET_DISCUSSION_RAW_SCHEMA
-        if include_discussion
-        else CHANGESET_RAW_SCHEMA
+    records = (
+        spark.read.option("lineSep", _CHANGESET_OPEN.decode())
+        .text(path)
+        .select(
+            F.col("value").cast("binary").alias("record"),
+            F.col("_metadata.file_path").alias("path"),
+            F.col("_metadata.file_block_start").alias("start"),
+        )
     )
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-    raw = files.mapInArrow(_parse_file_batches(include_discussion), raw_schema)
+    raw = records.mapInArrow(
+        _parse_split_batches(include_discussion), _raw_schema(include_discussion)
+    )
     return _typed(raw)
 
 
@@ -213,12 +310,9 @@ def read_changesets_stream(
         .load(dir_path)
         .select("path", "content")
     )
-    raw_schema = (
-        CHANGESET_DISCUSSION_RAW_SCHEMA
-        if include_discussion
-        else CHANGESET_RAW_SCHEMA
+    raw = files.mapInArrow(
+        _parse_file_batches(include_discussion), _raw_schema(include_discussion)
     )
-    raw = files.mapInArrow(_parse_file_batches(include_discussion), raw_schema)
     return _typed(raw)
 
 

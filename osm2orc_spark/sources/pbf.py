@@ -10,7 +10,8 @@ parallel tasks, because PBF blobs are independent by format design.
 
 Dataflow:
   scan_blob_index(path)            driver, header-only seek scan
-  -> DataFrame of (path,offset,size) blob refs, repartitioned
+  -> DataFrame of (path,offset,size) blob refs, one contiguous
+     slice per core (a local relation, no exchange)
   -> mapInArrow(decode)            pure-Python decode -> ONE Arrow
                                    RecordBatch per blob (~8k rows),
                                    zero per-row pickling
@@ -146,13 +147,25 @@ def read_pbf_stream(spark: SparkSession, dir_path: str) -> DataFrame:
 
 
 def read_pbf(spark: SparkSession, path: str) -> DataFrame:
-    """Read an OSM PBF file into a planet/planet_history DataFrame."""
+    """Read an OSM PBF file into a planet/planet_history DataFrame.
+
+    The blob refs go to the JVM as an Arrow table, i.e. a local relation:
+    its scan needs no Python worker and yields min(blobs,
+    defaultParallelism) contiguous partitions, so decode runs in one wave
+    of tasks with no exchange."""
+    import pyarrow as pa
+
     refs = [r for r in scan_blob_index(path) if r.kind == "OSMData"]
-    slices = max(1, min(len(refs), spark.sparkContext.defaultParallelism * 2))
     refs_df = spark.createDataFrame(
-        [(r.path, r.offset, r.size) for r in refs],
+        pa.table(
+            {
+                "path": [r.path for r in refs],
+                "offset": [r.offset for r in refs],
+                "size": [r.size for r in refs],
+            }
+        ),
         "path string, offset long, size long",
-    ).repartition(slices)
+    )
     raw = refs_df.mapInArrow(_decode_ref_batches, PLANET_RAW_SCHEMA)
     return _typed(raw)
 

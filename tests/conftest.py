@@ -34,6 +34,24 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def spark_conf(spark):
+    """``spark_conf(key, value)`` sets a session conf for one test; every
+    key set gets its old value (or unset state) back afterwards."""
+    saved: dict = {}
+
+    def set_conf(key: str, value: str) -> None:
+        saved.setdefault(key, spark.conf.get(key, None))
+        spark.conf.set(key, value)
+
+    yield set_conf
+    for key, value in saved.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 

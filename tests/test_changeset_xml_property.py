@@ -1,16 +1,25 @@
 """Property-based round-trip for the changeset XML writer/parser
 (SURVEY.md §5.4): random changesets — including XML-hostile user names
 and tag k/v (&, <, ", unicode) — render to XML, parse back, and must
-match field-for-field. Pure parser level (no Spark) so hypothesis can
-run many cases quickly."""
+match field-for-field. The round-trips are pure parser level (no Spark)
+so hypothesis can run many cases quickly; one Spark-level property reads
+the same XML split into tiny pieces and checks it against one whole-file
+parse."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+import itertools
+
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from osm2orc_spark.fixtures import changesets_xml
-from osm2orc_spark.sources.changeset_xml import parse_changeset_stream
+from osm2orc_spark.sources.changeset_xml import (
+    _raw_schema,
+    _typed,
+    parse_changeset_stream,
+    read_changesets,
+)
 
 nasty_text = st.text(
     alphabet=st.characters(
@@ -119,3 +128,37 @@ def test_xml_discussion_roundtrip(rows):
     for with_d, without in zip(parsed, plain):
         assert "comments" not in without
         assert {k: v for k, v in with_d.items() if k != "comments"} == without
+
+
+_split_file_ids = itertools.count()
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(st.lists(changeset_with_discussion, min_size=1, max_size=6))
+def test_tiny_splits_equal_whole_file_parse(spark, spark_conf, tmp_path_factory, rows):
+    """Spark's file splits cut the XML every few hundred bytes, so split
+    boundaries land inside tags, attribute values and discussions; the
+    split-parallel reader must still return exactly the rows of one
+    whole-file parse, discussions included."""
+    import json
+
+    spark_conf("spark.sql.files.maxPartitionBytes", "256")
+    xml = changesets_xml(rows).encode("utf-8")
+    path = tmp_path_factory.getbasetemp() / f"split_{next(_split_file_ids)}.osm.xml"
+    path.write_bytes(xml)
+
+    def canon(df):
+        return sorted(
+            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            for r in df.collect()
+        )
+
+    got = read_changesets(spark, str(path), include_discussion=True)
+    assert got.rdd.getNumPartitions() == -(-len(xml) // 256)
+    whole = list(parse_changeset_stream(path.name, xml, include_discussion=True))
+    want = _typed(spark.createDataFrame(whole, _raw_schema(True)))
+    assert canon(got) == canon(want)

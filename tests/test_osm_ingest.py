@@ -11,6 +11,7 @@ import pytest
 
 from osm2orc_spark.fixtures import (
     changeset_rows,
+    changesets_xml,
     planet_history_entities,
     write_pbf_fixture,
     write_xml_fixture,
@@ -288,6 +289,143 @@ class TestChangesetDiscussion:
         from osm2orc_spark.cli import main
 
         assert main(["--with-discussion", "in.pbf", "out"]) == 2
+
+
+class TestChangesetSplits:
+    """read_changesets cuts files at ``<changeset `` start tags along
+    Spark's file splits; every split layout must return exactly the rows
+    of the one-task read of the whole fixture."""
+
+    @staticmethod
+    def _rows(df):
+        import json
+
+        return sorted(
+            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            for r in df.collect()
+        )
+
+    @pytest.fixture(scope="class")
+    def want(self, spark, xml_path):
+        df = read_changesets(spark, xml_path, include_discussion=True)
+        assert df.rdd.getNumPartitions() == 1
+        return self._rows(df)
+
+    def test_glob_packed_into_one_task(self, spark, spark_conf, xml_path, want, tmp_path):
+        import shutil
+
+        other = changeset_rows(seed=7, n=60)
+        shutil.copy(xml_path, tmp_path / "a.osm.xml")
+        (tmp_path / "b.osm.xml").write_text(changesets_xml(other))
+        only_b = read_changesets(spark, str(tmp_path / "b.osm.xml"), include_discussion=True)
+        want_b = self._rows(only_b)
+        spark_conf("spark.sql.files.minPartitionNum", "1")
+        df = read_changesets(spark, str(tmp_path / "*.osm.xml"), include_discussion=True)
+        assert df.rdd.getNumPartitions() == 1
+        assert self._rows(df) == sorted(want + want_b)
+
+    def test_bz2_splits_across_tasks(self, spark, spark_conf, xml_path, want, tmp_path):
+        import bz2
+
+        from pyspark.sql import functions as F
+
+        path = tmp_path / "changesets.osm.xml.bz2"
+        # 100k-byte bzip2 blocks: the fixture spans three, so a split can
+        # start at a block of its own
+        path.write_bytes(bz2.compress(pathlib.Path(xml_path).read_bytes(), 1))
+        spark_conf("spark.sql.files.maxPartitionBytes", "8k")
+        df = read_changesets(spark, str(path), include_discussion=True)
+        assert df.select(F.spark_partition_id()).distinct().count() > 1
+        assert self._rows(df) == want
+
+    def test_runs_span_arrow_batches(self, spark, spark_conf, xml_path, want, tmp_path):
+        import shutil
+
+        # 7-record Arrow batches cut every split's run, the head run too,
+        # so only a split's first batch may see the file's prolog; the
+        # copy keeps the read off any cached plan of the fixture path
+        path = shutil.copy(xml_path, tmp_path / "changesets.osm.xml")
+        spark_conf("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+        spark_conf("spark.sql.files.maxPartitionBytes", "8k")
+        df = read_changesets(spark, str(path), include_discussion=True)
+        assert df.rdd.getNumPartitions() > 1
+        assert self._rows(df) == want
+
+    def test_gz_is_one_task(self, spark, spark_conf, xml_path, want, tmp_path):
+        import gzip
+
+        path = tmp_path / "changesets.osm.xml.gz"
+        path.write_bytes(gzip.compress(pathlib.Path(xml_path).read_bytes()))
+        spark_conf("spark.sql.files.maxPartitionBytes", "8k")
+        df = read_changesets(spark, str(path), include_discussion=True)
+        assert df.rdd.getNumPartitions() == 1
+        assert self._rows(df) == want
+
+    @pytest.mark.parametrize(
+        "content, message",
+        [
+            (
+                b'<?xml version="1.0"?><notosm><changeset id="1"/></notosm>',
+                "root element <notosm> is not <osm>",
+            ),
+            (None, "bzip2/gzip content without a .bz2/.gz name"),
+        ],
+        ids=["wrong_root", "unnamed_bz2"],
+    )
+    def test_not_a_changeset_file_raises(self, spark, xml_path, tmp_path, content, message):
+        import bz2
+
+        if content is None:
+            content = bz2.compress(pathlib.Path(xml_path).read_bytes())
+        path = tmp_path / "bad.osm.xml"
+        path.write_bytes(content)
+        with pytest.raises(Exception, match="NotAChangesetFileError") as err:
+            read_changesets(spark, str(path)).collect()
+        assert message in str(err.value)
+
+    @pytest.mark.parametrize(
+        "content",
+        [b'<?xml version="1.0"?>\n<osm version="0.6"/>\n', b"<osm version='0.6'>\n</osm>\n"],
+        ids=["empty_root", "no_changesets"],
+    )
+    def test_file_without_changesets_reads_no_rows(self, spark, tmp_path, content):
+        path = tmp_path / "empty.osm.xml"
+        path.write_bytes(content)
+        assert read_changesets(spark, str(path)).collect() == []
+
+    def test_cdata_straddling_a_split_fails_loudly(self, spark, spark_conf, tmp_path):
+        hidden = '<changeset id="0" ' * 100
+        path = tmp_path / "cdata.osm.xml"
+        path.write_text(
+            '<?xml version="1.0" encoding="UTF-8"?>\n<osm version="0.6">\n'
+            '  <changeset id="1" open="false" num_changes="1" comments_count="1">'
+            '<discussion><comment date="2015-01-01T00:00:00Z">'
+            f"<text><![CDATA[{hidden}]]></text></comment></discussion></changeset>\n"
+            '  <changeset id="2" open="false" num_changes="1" comments_count="0"/>\n'
+            "</osm>\n"
+        )
+        # one split: the records of a run rejoin losslessly, CDATA included
+        rows = read_changesets(spark, str(path), include_discussion=True).collect()
+        assert [(r["id"], [c["text"] for c in r["comments"]]) for r in sorted(rows)] == [
+            (1, [hidden]),
+            (2, []),
+        ]
+        spark_conf("spark.sql.files.maxPartitionBytes", "256")
+        with pytest.raises(Exception, match="ParseError"):
+            read_changesets(spark, str(path), include_discussion=True).collect()
+
+    def test_cli_stdin_bz2(self, spark, xml_path, tmp_path, monkeypatch):
+        import bz2
+        import io
+        import types
+
+        from osm2orc_spark.cli import main
+
+        data = bz2.compress(pathlib.Path(xml_path).read_bytes())
+        monkeypatch.setattr("sys.stdin", types.SimpleNamespace(buffer=io.BytesIO(data)))
+        out = str(tmp_path / "cs_orc")
+        assert main(["--changesets", "-", out]) == 0
+        assert self._rows(spark.read.orc(out)) == self._rows(read_changesets(spark, xml_path))
 
 
 class TestOrcSink:

@@ -27,6 +27,23 @@ def plan_of(spark, sf, name: str, execute: bool = False) -> str:
     return buf.getvalue()
 
 
+def plan_nodes(plan):
+    """Every node of a JVM physical plan, pre-order.  An adaptive plan
+    and its query stages are leaves that hold their subtree aside; the
+    walk steps into it."""
+    yield plan
+    kind = plan.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif kind.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        seq = plan.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    for kid in kids:
+        yield from plan_nodes(kid)
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_correctness):
     # q6's shipdate/discount/quantity predicates must reach the parquet scan
     plan = plan_of(spark, sf_correctness, "q6_forecast_revenue")
@@ -784,3 +801,27 @@ def test_changeset_entities_pruned_scan_distinct_rewrite(spark, sf_correctness):
     # distinct rewrite: partial on (type,id), merge, then per-type final
     assert plan.count("HashAggregate") >= 3
     assert "partial_" in plan
+
+
+def test_pbf_decode_is_one_wave_without_exchange(spark):
+    """read_pbf decodes min(blobs, defaultParallelism) contiguous slices
+    of the blob index in one wave: no Exchange below the MapInArrow, and
+    the blob refs come from a local relation, whose scan runs no Python."""
+    import pathlib
+
+    from osm2orc_spark.sources.pbf import read_pbf
+    from osm2orc_spark.sources.pbf_codec import scan_blob_index
+
+    pbf = str(pathlib.Path(__file__).resolve().parents[1] / "fixtures" / "tiny.osm.pbf")
+    blobs = sum(1 for r in scan_blob_index(pbf) if r.kind == "OSMData")
+    df = read_pbf(spark, pbf)
+    df.collect()
+    decode = [
+        n for n in plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "MapInArrow"
+    ]
+    assert len(decode) == 1
+    below = [n.nodeName() for n in plan_nodes(decode[0])][1:]
+    assert not [n for n in below if "Exchange" in n], below
+    assert below[-1] == "LocalTableScan", below
+    assert df.rdd.getNumPartitions() == min(blobs, spark.sparkContext.defaultParallelism)

@@ -1000,7 +1000,7 @@ def test_fanout_gate_r15_identity(spark, sf_correctness, name, monkeypatch):
 def test_scan_splits_probe(spark, sf_smoke):
     """The probe reports the planned scan's split count (driver-side
     metadata, memoized) — the gate-SF documents file is one split."""
-    n = switches.scan_splits(spark, sf_smoke, "documents")
+    n = switches.scan_splits(spark, sf_smoke)
     assert n >= 1
     import os
 
