@@ -28,17 +28,19 @@ string as the text source's line separator, so Spark's file-split rule
 sets the task count (4 tasks for a 22.6 MB file on 4 cores) and packs
 small files of a glob into one task.  Plain and ``.bz2`` files split
 (Hadoop decompresses bzip2 per split); ``.gz`` is one task per file.
-Each task rebuilds a run of consecutive records of one split into one
-document: the first record of a file keeps the prolog and ``<osm>``
-root (checked as before), every other run gets a bare ``<osm>`` wrapper,
-and the file's own ``</osm>`` closes the run that holds it.  A run
-without the prolog is read as UTF-8 (the encoding of OSM's changeset
-dumps), so a file whose prolog declares another encoding fails once it
-spans more than one split.  Per-task memory is one Arrow batch of
-records.  A split that falls inside CDATA, a comment or a processing
-instruction leaves a run that does not parse, so the job fails rather
-than mis-splitting.  The streaming reader keeps one task per landed
-file (``binaryFile``).
+Each task streams the records of each of its file splits into one
+document: the first split keeps the file's prolog and ``<osm>`` root
+(checked as before), every other split gets the file's XML declaration
+and a bare ``<osm>``, and only the split that ends the file goes without
+a synthetic ``</osm>``, so a truncated file fails to parse.  A file that
+Spark may split is read at both ends on the driver first: its
+declaration, and its end, which must close the root (the task holding a
+file's last record cannot tell it is the last when the file's final
+split starts inside it).  Per-task memory is one Arrow batch of records
+and one of rows.  A split that falls inside CDATA, a comment or a
+processing instruction leaves a document that does not parse, so the
+job fails rather than mis-splitting.  The streaming reader keeps one
+task per landed file (``binaryFile``).
 """
 
 from __future__ import annotations
@@ -48,8 +50,9 @@ import gzip
 import io
 import re
 from collections.abc import Iterator
-from itertools import groupby
-from xml.etree.ElementTree import iterparse
+from itertools import groupby, islice
+from urllib.parse import unquote, urlsplit
+from xml.etree.ElementTree import ParseError, iterparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -219,27 +222,67 @@ def _parse_file_batches(include_discussion: bool = False):
 
 # The text source's record separator: every ``<changeset `` start tag.
 _CHANGESET_OPEN = b"<changeset "
-# A file's last record holds the root's close tag (or an empty root).
-_ROOT_CLOSED = re.compile(rb"</osm\s*>|<osm\b[^>]*/>")
+# A record that ends its document: the root's close tag (or an empty
+# root), followed only by whitespace, comments or processing instructions.
+_ROOT_CLOSED = re.compile(
+    rb"(?:</osm\s*>|<osm\b[^>]*/>)(?:\s|<!--.*?-->|<\?.*?\?>)*\Z", re.S
+)
+# A file's XML declaration, after an optional UTF-8 byte order mark.
+_DECLARATION = re.compile(rb"(?:\xef\xbb\xbf)?(<\?xml\s[^?]*\?>)")
 
 
-def _split_document(records: list[bytes], head: bool) -> bytes:
-    """One document from consecutive records of one file split.  With
-    ``head``, ``records[0]`` is the file's first record (prolog and
-    ``<osm ...>`` root); otherwise a bare ``<osm>`` opens the run.  A run
-    that does not hold the file's last record gets a ``</osm>``."""
-    doc = _CHANGESET_OPEN.join(records)
-    if not head:
-        doc = b"<osm>" + _CHANGESET_OPEN + doc
-    if not _ROOT_CLOSED.search(records[-1]):
-        doc += b"</osm>"
-    return doc
+def _check_uncompressed(path: str, head: bytes) -> None:
+    """A file's first bytes are not bzip2/gzip content: the text source
+    picks its codec by file name, so a compressed file under a plain name
+    would reach the parser undecoded."""
+    if codec_suffix(head):
+        raise NotAChangesetFileError(
+            f"{path}: bzip2/gzip content without a .bz2/.gz name"
+        )
 
 
-def _parse_split_batches(include_discussion: bool = False):
-    """mapInArrow worker factory over the text source's (record, path,
-    start) rows: each run of consecutive records of one file split in an
-    Arrow batch parses as one document to one RecordBatch."""
+class _Chunks:
+    """File-like ``read`` over an iterator of byte chunks, so ``iterparse``
+    pulls a split's records as the Arrow batches arrive."""
+
+    def __init__(self, chunks: Iterator[bytes]):
+        self._chunks = chunks
+
+    def read(self, size: int = -1) -> bytes:
+        return b"".join(islice(self._chunks, 64))
+
+
+def _split_document(
+    path: str, records: Iterator[bytes], head: bool, at_end: bool, prolog: bytes
+) -> Iterator[bytes]:
+    """The chunks of one document over the records of one file split.
+
+    The first split's first record is the file's own prolog and ``<osm``
+    root; any other split opens with ``prolog`` (the file's XML
+    declaration) and a bare ``<osm>``.  The split that ends the file keeps
+    the file's own end, so a truncated file does not parse.  Any other
+    split gets a ``</osm>`` unless its last record already closes the root,
+    which happens when the file's last split holds no record start."""
+    if head:
+        last = next(records)
+        _check_uncompressed(path, last)
+        yield last
+    else:
+        last = b""
+        yield prolog + b"<osm>"
+    for last in records:
+        yield _CHANGESET_OPEN + last
+    if not at_end and not _ROOT_CLOSED.search(last):
+        yield b"</osm>"
+
+
+def _parse_split_batches(
+    include_discussion: bool, prologs: dict[str, bytes], batch_rows: int
+):
+    """mapInArrow worker factory over the text source's (path, start,
+    at_end, record) rows: the records of each file split parse as one
+    document, streamed across Arrow batches, into RecordBatches of up to
+    ``batch_rows`` rows (all rows when it is not positive)."""
     raw_schema = _raw_schema(include_discussion)
 
     def worker(batches) -> Iterator:
@@ -248,49 +291,126 @@ def _parse_split_batches(include_discussion: bool = False):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(raw_schema)
-        last = None
-        for batch in batches:
-            cols = batch.to_pydict()
-            rows = zip(cols["path"], cols["start"], cols["record"])
-            for key, run in groupby(rows, key=lambda r: r[:2]):
-                path, start = key
-                records = [r[2] for r in run]
-                head = start == 0 and key != last
-                last = key
-                if head and codec_suffix(records[0]):
-                    raise NotAChangesetFileError(
-                        f"{path}: bzip2/gzip content without a .bz2/.gz name"
-                    )
-                doc = _split_document(records, head)
-                out = list(_changeset_rows(path, io.BytesIO(doc), include_discussion))
-                if out:
-                    yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
+
+        def records():
+            for batch in batches:
+                c = batch.to_pydict()
+                yield from zip(c["path"], c["start"], c["at_end"], c["record"])
+
+        def document(path, start, at_end, run):
+            prolog = prologs.get(unquote(urlsplit(path).path), b"")
+            records = (r[3] for r in run)
+            return _Chunks(_split_document(path, records, start == 0, at_end, prolog))
+
+        rows = (
+            row
+            for key, run in groupby(records(), key=lambda r: r[:3])
+            for row in _changeset_rows(key[0], document(*key, run), include_discussion)
+        )
+        while out := list(islice(rows, batch_rows if batch_rows > 0 else None)):
+            yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
 
     return worker
+
+
+def _file_ends(fs, path, size: int, codec, by_block) -> tuple[bytes, bytes]:
+    """The first bytes and the last bytes of a plain or bzip2 file's
+    content: 64 KiB of a plain file's end, every bzip2 block that starts in
+    the last 256 KiB (or more, until one does)."""
+    if codec is None:
+        inp = fs.open(path)
+        try:
+            inp.seek(max(0, size - (64 << 10)))
+            tail = bytes(inp.readNBytes(64 << 10))
+            inp.seek(0)
+            return bytes(inp.readNBytes(256)), tail
+        finally:
+            inp.close()
+    inp = codec.createInputStream(fs.open(path))
+    try:
+        head = bytes(inp.readNBytes(256))
+    finally:
+        inp.close()
+    window = 1 << 18
+    while True:
+        start = max(0, size - window)
+        inp = codec.createInputStream(
+            fs.open(path), codec.createDecompressor(), start, size, by_block
+        )
+        try:
+            tail = bytes(inp.readAllBytes())
+        finally:
+            inp.close()
+        if tail or start == 0:
+            return head, tail
+        window *= 4
+
+
+def _split_file_prologs(spark: SparkSession, files: list[str]) -> dict[str, bytes]:
+    """Check each file Spark may cut into several splits on the driver, and
+    return its XML declaration keyed by the file's decoded path.
+
+    The task that reads a file's last record cannot tell it is the last
+    when the file's final split starts inside that record (that split then
+    reads no record), so the end of the file is read here: it must close
+    the ``<osm>`` root, else the file is truncated.  The declaration gives
+    the encoding that the splits after the first are parsed in.  A file no
+    larger than min(maxPartitionBytes, openCostInBytes) is one split, as is
+    a file whose codec does not split (gzip): its one task sees both ends."""
+    jvm = spark._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    one_split = min(sql_conf.filesMaxPartitionBytes(), sql_conf.filesOpenCostInBytes())
+    compress = jvm.org.apache.hadoop.io.compress
+    codecs = compress.CompressionCodecFactory(hconf)
+    splittable = compress.SplittableCompressionCodec._java_lang_class
+    by_block = getattr(compress, "SplittableCompressionCodec$READ_MODE").BYBLOCK
+    prologs = {}
+    for uri in files:
+        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(uri))
+        fs = path.getFileSystem(hconf)
+        status = fs.getFileStatus(path)
+        codec = codecs.getCodec(path)
+        if status.getLen() <= one_split or not (
+            codec is None or splittable.isInstance(codec)
+        ):
+            continue
+        head, tail = _file_ends(fs, path, status.getLen(), codec, by_block)
+        _check_uncompressed(uri, head)
+        if not _ROOT_CLOSED.search(tail):
+            raise ParseError(f"{uri}: no </osm> root close at the end (truncated?)")
+        declaration = _DECLARATION.match(head)
+        prologs[status.getPath().toUri().getPath()] = (
+            declaration.group(1) if declaration else b""
+        )
+    return prologs
 
 
 def read_changesets(
     spark: SparkSession, path: str, include_discussion: bool = False
 ) -> DataFrame:
     """Read changeset XML file(s) at ``path`` (glob ok; .xml/.gz/.bz2),
-    split across tasks at ``<changeset `` start tags.
+    split across tasks at ``<changeset `` start tags.  A file that Spark
+    splits is checked for truncation here; any other fails in its task.
 
     ``include_discussion`` (opt-in — the reference's TODO surface,
     OsmPbf2Orc.java:193-195) appends ``comments
     ARRAY<STRUCT<date TIMESTAMP, uid BIGINT, user STRING, text STRING>>``;
     the default output schema is unchanged."""
-    records = (
-        spark.read.option("lineSep", _CHANGESET_OPEN.decode())
-        .text(path)
-        .select(
-            F.col("value").cast("binary").alias("record"),
-            F.col("_metadata.file_path").alias("path"),
-            F.col("_metadata.file_block_start").alias("start"),
-        )
+    text = spark.read.option("lineSep", _CHANGESET_OPEN.decode()).text(path)
+    block_end = F.col("_metadata.file_block_start") + F.col("_metadata.file_block_length")
+    records = text.select(
+        F.col("_metadata.file_path").alias("path"),
+        F.col("_metadata.file_block_start").alias("start"),
+        (block_end >= F.col("_metadata.file_size")).alias("at_end"),
+        F.col("value").cast("binary").alias("record"),
     )
-    raw = records.mapInArrow(
-        _parse_split_batches(include_discussion), _raw_schema(include_discussion)
+    worker = _parse_split_batches(
+        include_discussion,
+        _split_file_prologs(spark, text.inputFiles()),
+        int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
     )
+    raw = records.mapInArrow(worker, _raw_schema(include_discussion))
     return _typed(raw)
 
 

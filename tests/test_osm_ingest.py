@@ -19,6 +19,8 @@ from osm2orc_spark.fixtures import (
 from osm2orc_spark.sinks.orc import read_metadata, write_orc
 from osm2orc_spark.sources.changeset_xml import (
     NotAChangesetFileError,
+    _raw_schema,
+    _typed,
     parse_changeset_stream,
     read_changesets,
 )
@@ -324,19 +326,99 @@ class TestChangesetSplits:
         assert df.rdd.getNumPartitions() == 1
         assert self._rows(df) == sorted(want + want_b)
 
-    def test_bz2_splits_across_tasks(self, spark, spark_conf, xml_path, want, tmp_path):
+    @pytest.mark.parametrize("streams", [1, 2], ids=["one_stream", "two_streams"])
+    def test_bz2_splits_across_tasks(self, spark, spark_conf, xml_path, want, tmp_path, streams):
         import bz2
 
         from pyspark.sql import functions as F
 
+        data = pathlib.Path(xml_path).read_bytes()
         path = tmp_path / "changesets.osm.xml.bz2"
         # 100k-byte bzip2 blocks: the fixture spans three, so a split can
-        # start at a block of its own
-        path.write_bytes(bz2.compress(pathlib.Path(xml_path).read_bytes(), 1))
+        # start at a block of its own; parallel compressors (pbzip2,
+        # lbzip2) write one stream per piece, concatenated
+        cut = len(data) // streams
+        path.write_bytes(b"".join(bz2.compress(data[i : i + cut], 1) for i in range(0, len(data), cut)))
         spark_conf("spark.sql.files.maxPartitionBytes", "8k")
         df = read_changesets(spark, str(path), include_discussion=True)
         assert df.select(F.spark_partition_id()).distinct().count() > 1
         assert self._rows(df) == want
+
+    @staticmethod
+    def _assert_parse_error(read):
+        """``read()`` fails with a ParseError: at read time when the file
+        is checked on the driver, else in the task that parses its end."""
+        import xml.etree.ElementTree as ET
+
+        with pytest.raises(Exception) as err:
+            read().collect()
+        assert err.type is ET.ParseError or "ParseError" in str(err.value)
+
+    @staticmethod
+    def _truncated(xml_path) -> bytes:
+        """The fixture cut right after a ``</changeset>``: every record is
+        well-formed, only the root's close is missing."""
+        data = pathlib.Path(xml_path).read_bytes()
+        return data[: data.rindex(b"</changeset>\n") + len(b"</changeset>\n")]
+
+    @pytest.mark.parametrize(
+        "codec, split",
+        [("", None), ("", "256"), (".bz2", "8k"), (".gz", "8k")],
+        ids=["one_split", "tiny_splits", "bz2_splits", "gz"],
+    )
+    def test_truncated_file_fails(self, spark, spark_conf, xml_path, tmp_path, codec, split):
+        import bz2
+        import gzip
+
+        data = self._truncated(xml_path)
+        compress = {"": bytes, ".bz2": lambda d: bz2.compress(d, 1), ".gz": gzip.compress}
+        path = tmp_path / f"changesets.osm.xml{codec}"
+        path.write_bytes(compress[codec](data))
+        if split:
+            spark_conf("spark.sql.files.maxPartitionBytes", split)
+        self._assert_parse_error(lambda: read_changesets(spark, str(path)))
+
+    @pytest.mark.parametrize("truncated", [False, True], ids=["whole", "truncated"])
+    def test_last_split_inside_last_record(self, spark, spark_conf, xml_path, want, tmp_path, truncated):
+        """Two splits, the second starting inside the file's last record:
+        that split reads no record, and the first split's task reads the
+        last record without knowing it is the last."""
+        data = self._truncated(xml_path) if truncated else pathlib.Path(xml_path).read_bytes()
+        path = tmp_path / "changesets.osm.xml"
+        path.write_bytes(data)
+        last = data.rindex(b"<changeset ") + len(b"<changeset ")
+        assert 2 * (last + 5) > len(data)
+        spark_conf("spark.sql.files.maxPartitionBytes", str(last + 5))
+        if truncated:
+            self._assert_parse_error(lambda: read_changesets(spark, str(path)))
+        else:
+            df = read_changesets(spark, str(path), include_discussion=True)
+            assert df.rdd.getNumPartitions() == 2
+            assert self._rows(df) == want
+
+    @pytest.mark.parametrize("split", [None, "256"], ids=["one_split", "tiny_splits"])
+    def test_declared_encoding_reaches_every_split(self, spark, spark_conf, tmp_path, split):
+        """An ISO-8859-1 file parses the same whichever split a record
+        falls in: the splits after the first get the file's declaration."""
+        rows = changeset_rows(seed=3, n=30)
+        for i, r in enumerate(rows):
+            r["user"] = f"Jos\u00e9 M\u00fcller {i}"
+        xml = (
+            changesets_xml(rows)
+            .replace('encoding="UTF-8"', 'encoding="ISO-8859-1"')
+            .encode("latin-1", "xmlcharrefreplace")
+        )
+        # a space and a percent sign: file names reach the tasks URL-encoded
+        (tmp_path / "latin 1%").mkdir()
+        path = tmp_path / "latin 1%" / "changesets.osm.xml"
+        path.write_bytes(xml)
+        if split:
+            spark_conf("spark.sql.files.maxPartitionBytes", split)
+        df = read_changesets(spark, str(path))
+        assert (df.rdd.getNumPartitions() > 1) == bool(split)
+        assert sorted(r["user"] for r in df.collect()) == sorted(r["user"] for r in rows)
+        whole = parse_changeset_stream(path.name, xml)
+        assert self._rows(df) == self._rows(_typed(spark.createDataFrame(list(whole), _raw_schema(False))))
 
     def test_runs_span_arrow_batches(self, spark, spark_conf, xml_path, want, tmp_path):
         import shutil
@@ -372,15 +454,20 @@ class TestChangesetSplits:
         ],
         ids=["wrong_root", "unnamed_bz2"],
     )
-    def test_not_a_changeset_file_raises(self, spark, xml_path, tmp_path, content, message):
+    @pytest.mark.parametrize("split", [None, "256"], ids=["one_split", "tiny_splits"])
+    def test_not_a_changeset_file_raises(self, spark, spark_conf, xml_path, tmp_path, content, message, split):
         import bz2
 
         if content is None:
             content = bz2.compress(pathlib.Path(xml_path).read_bytes())
         path = tmp_path / "bad.osm.xml"
         path.write_bytes(content)
-        with pytest.raises(Exception, match="NotAChangesetFileError") as err:
+        if split:
+            spark_conf("spark.sql.files.maxPartitionBytes", split)
+        # raised on the driver when the file is checked there, else in a task
+        with pytest.raises(Exception) as err:
             read_changesets(spark, str(path)).collect()
+        assert err.type is NotAChangesetFileError or "NotAChangesetFileError" in str(err.value)
         assert message in str(err.value)
 
     @pytest.mark.parametrize(
