@@ -49,7 +49,7 @@ from osm2orc_spark.sources.pbf_codec import (
 
 # Raw decode schema: exact decimal coordinates (decimal128 built directly
 # from the PBF's nanodegree ints — no float, no string, no per-item Python;
-# see pbf_codec.nano_to_decimal128), epoch-millis timestamps.
+# see pbf_codec._nano_np_to_decimal128), epoch-millis timestamps.
 PLANET_RAW_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType()),
@@ -82,10 +82,10 @@ PLANET_RAW_SCHEMA = T.StructType(
 
 def _decode_ref_batches(batches) -> Iterator:
     """mapInArrow worker: (path, offset, size) rows -> one RecordBatch per
-    decoded blob via the codec's Arrow-native decode
+    decoded blob via the codec's one block decoder
     (decode_primitive_block_arrow): numpy arrays flow straight into
     Arrow buffers, tag maps are `take` gathers on the string-table
-    StringArray — no per-entity Python object is ever materialized.
+    StringArray, and dense nodes never become Python objects.
     A test pins to_arrow_schema(PLANET_RAW_SCHEMA) == the codec's own
     planet_arrow_schema()."""
     from pyspark.sql.pandas.types import to_arrow_schema

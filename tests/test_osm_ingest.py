@@ -130,7 +130,8 @@ class TestChangesetXml:
         df = read_changesets(spark, xml_path)
         df.cache()
         df.count()
-        return df
+        yield df
+        df.unpersist(blocking=True)
 
     def test_count(self, cs):
         assert cs.count() == len(changeset_rows())
@@ -216,7 +217,10 @@ class TestChangesetDiscussion:
         df = read_changesets(spark, xml_path, include_discussion=True)
         df.cache()
         df.count()
-        return df
+        yield df
+        # a cached plan would serve every later read of xml_path with the
+        # same plan, whatever split conf that read sets
+        df.unpersist(blocking=True)
 
     @staticmethod
     def _shape(schema):

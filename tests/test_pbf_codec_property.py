@@ -4,16 +4,23 @@ so hypothesis can run hundreds of cases quickly."""
 
 from __future__ import annotations
 
+from decimal import Decimal
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from osm2orc_spark.sources.pbf_codec import (
     PbfWriter,
+    _emit_bytes,
+    _emit_packed,
+    _emit_varint,
     decode_header_block,
-    decode_primitive_block,
+    decode_primitive_block_arrow,
     read_blob,
     scan_blob_index,
 )
+from tests.pbf_reference import decode_block
 
 tag_text = st.text(
     alphabet=st.characters(whitelist_categories=("L", "N", "P", "Zs")),
@@ -90,12 +97,13 @@ def relations_strategy():
 
 
 def _decode_all(data: bytes, tmp_path) -> list[dict]:
+    """Every entity of a PBF file, decoded by the scalar reference."""
     p = tmp_path / "t.pbf"
     p.write_bytes(data)
     out = []
     for ref in scan_blob_index(str(p)):
         if ref.kind == "OSMData":
-            out.extend(decode_primitive_block(read_blob(ref)))
+            out.extend(decode_block(read_blob(ref)))
     return out
 
 
@@ -116,11 +124,9 @@ def test_roundtrip(tmp_path_factory, nodes, ways, rels):
     assert len(decoded) == len(nodes) + len(ways) + len(rels)
     for e in nodes:
         d = by_key[("node", e["id"])]
-        # coordinates: writer quantizes to granularity=100 (7 decimals kept)
-        assert d["lat"].rstrip("0").rstrip(".") == (
-            f"{float(e['lat']):.7f}".rstrip("0").rstrip(".")
-        ) or d["lat"].startswith(e["lat"][: e["lat"].index(".") + 8])
-        assert d["tags"] == e["tags"]
+        # 7-decimal coordinates sit exactly on the default granularity=100
+        assert d["lat"] == Decimal(e["lat"]) and d["lon"] == Decimal(e["lon"])
+        assert dict(d["tags"]) == e["tags"]
         assert d["version"] == e["version"]
         assert d["visible"] == e["visible"]
         assert d["timestamp_ms"] == e["timestamp_ms"]
@@ -130,11 +136,12 @@ def test_roundtrip(tmp_path_factory, nodes, ways, rels):
     for e in ways:
         d = by_key[("way", e["id"])]
         assert d["nds"] == e["nds"]  # order-preserving (B9)
-        assert d["tags"] == e["tags"]
+        assert dict(d["tags"]) == e["tags"]
         assert d["lat"] is None and d["lon"] is None  # B3
     for e in rels:
         d = by_key[("relation", e["id"])]
-        assert d["members"] == e["members"]  # ordered, roles exact (B10)
+        members = [(m["type"], m["ref"], m["role"]) for m in d["members"]]
+        assert members == e["members"]  # ordered, roles exact (B10)
 
 
 @settings(max_examples=20, deadline=None)
@@ -162,12 +169,8 @@ INT64_MIN, INT64_MAX = -(1 << 63), (1 << 63) - 1
 def test_packed_svarint_vectorized_roundtrip(vals):
     """The numpy varint decoder must agree with the encoder over the full
     int64 range — including 10-byte varints (negatives), whose top bits
-    wrap at 64 in both the scalar and vectorized paths. Lists above ~27
-    bytes exercise the numpy branch, short ones the scalar branch."""
-    from osm2orc_spark.sources.pbf_codec import (
-        _emit_packed,
-        _packed_svarints_list,
-    )
+    wrap at 64."""
+    from osm2orc_spark.sources.pbf_codec import _packed_varints_np, _zigzag_np
 
     out = bytearray()
     _emit_packed(out, 1, vals, zigzag=True)
@@ -177,17 +180,13 @@ def test_packed_svarint_vectorized_roundtrip(vals):
     pos = 1  # tag byte (field 1, wire 2)
     _, pos = _read_varint(bytes(out), pos)
     payload = bytes(out[pos:])
-    assert _packed_svarints_list(payload) == vals
+    assert _zigzag_np(_packed_varints_np(payload)).tolist() == vals
 
 
 @settings(max_examples=200, deadline=None)
 @given(deltas=st.lists(st.integers(-(1 << 40), 1 << 40), max_size=100))
 def test_packed_svarint_delta_matches_prefix_sum(deltas):
-    from osm2orc_spark.sources.pbf_codec import (
-        _emit_packed,
-        _packed_svarints_list,
-        _read_varint,
-    )
+    from osm2orc_spark.sources.pbf_codec import _packed_deltas_np, _read_varint
 
     out = bytearray()
     _emit_packed(out, 1, deltas, zigzag=True)
@@ -198,7 +197,7 @@ def test_packed_svarint_delta_matches_prefix_sum(deltas):
     for d in deltas:
         acc += d
         want.append(acc)
-    assert _packed_svarints_list(payload, delta=True) == want
+    assert _packed_deltas_np(payload).tolist() == want
 
 
 def test_empty_string_tag_value_dense_roundtrip(tmp_path):
@@ -214,72 +213,68 @@ def test_empty_string_tag_value_dense_roundtrip(tmp_path):
           version=1, visible=True, changeset=5, timestamp_ms=1000, uid=7, user="u")
     w.add(type="node", id=3, tags={"k": "", "": "v"}, lat="1.0", lon="2.0",
           version=1, visible=True, changeset=5, timestamp_ms=1000, uid=7, user="u")
-    decoded = _decode_all(w.tobytes(nodes_per_block=7), tmp_path)
+    data = w.tobytes(nodes_per_block=7)
+    decoded = _decode_all(data, tmp_path)
     by_id = {d["id"]: d for d in decoded}
-    assert by_id[1]["tags"] == {"0": ""}
+    assert by_id[1]["tags"] == [("0", "")]
     assert by_id[1]["user"] == ""
-    assert by_id[2]["tags"] == {}
-    assert by_id[3]["tags"] == {"k": "", "": "v"}
+    assert by_id[2]["tags"] == []
+    assert by_id[3]["tags"] == [("k", ""), ("", "v")]
+    _assert_arrow_parity(data, tmp_path)
 
 
-def test_noncompliant_zero_sid_falls_back(tmp_path):
+class SloppyWriter(PbfWriter):
+    """Interns "" at string 0, the dense keys_vals terminator (an old,
+    non-compliant intern), so an empty value is written as sid 0."""
+
+    def _build_strings(self):
+        table, index = super()._build_strings()
+        return table, {**index, "": 0}
+
+
+def test_noncompliant_zero_sid_decodes_sequentially(tmp_path):
     """Files that (illegally) reference string 0 inside keys_vals still
-    decode via the sequential key-position-aware loop: zeros in value
-    position make the terminator count exceed the node count, which
-    disables the vectorized split."""
-
-    class SloppyWriter(PbfWriter):
-        def _build_strings(self):
-            table, index = super()._build_strings()
-            # emulate the old non-compliant intern: "" -> index 0
-            idx = dict(index)
-            idx[""] = 0
-            return table, idx
-
+    decode: zeros in value position make the terminator count exceed the
+    node count, and the stream is then read pair by pair."""
     w = SloppyWriter()
     w.add(type="node", id=1, tags={"a": ""}, lat="1.0", lon="2.0",
           version=1, visible=True, changeset=5, timestamp_ms=1000, uid=7, user="u")
     w.add(type="node", id=2, tags={"b": "x"}, lat="1.0", lon="2.0",
           version=1, visible=True, changeset=5, timestamp_ms=1000, uid=7, user="u")
-    decoded = _decode_all(w.tobytes(nodes_per_block=7), tmp_path)
+    data = w.tobytes(nodes_per_block=7)
+    decoded = _decode_all(data, tmp_path)
     by_id = {d["id"]: d for d in decoded}
-    assert by_id[1]["tags"] == {"a": ""}
-    assert by_id[2]["tags"] == {"b": "x"}
+    assert by_id[1]["tags"] == [("a", "")]
+    assert by_id[2]["tags"] == [("b", "x")]
+    _assert_arrow_parity(data, tmp_path)
 
 
 # ---------------------------------------------------------------------------
-# Arrow-native decode parity: decode_primitive_block_arrow must produce a
-# RecordBatch IDENTICAL to the dict path + columns_to_batch for every
-# block — the Spark ingest path runs the arrow decode, the tests and the
-# row adapter run the dict path, and this is the bridge that keeps them
-# honest (including the fallback routes: non-compliant zero sids, plain
-# Node messages, multi-byte string-table lengths).
+# Production decode vs the scalar reference (tests/pbf_reference.py):
+# decode_primitive_block_arrow must return exactly the reference's rows
+# for every block, including the inputs the spec leaves open (long
+# strings, plain Node and ChangeSet messages, sid 0 as a value, dangling
+# and duplicate keys, unknown Info fields).
 # ---------------------------------------------------------------------------
+
+
+def _assert_block_parity(payload: bytes) -> list[dict]:
+    want = decode_block(payload)
+    got = decode_primitive_block_arrow(payload)
+    assert (got is None) == (not want)
+    rows = [] if got is None else got.to_pylist()
+    assert rows == want
+    return rows
 
 
 def _assert_arrow_parity(data: bytes, tmp_path) -> int:
-    from osm2orc_spark.sources.pbf_codec import (
-        columns_to_batch,
-        decode_primitive_block_arrow,
-        decode_primitive_block_columns,
-        planet_arrow_schema,
-    )
-
     p = tmp_path / "parity.pbf"
     p.write_bytes(data)
-    schema = planet_arrow_schema()
     n_blocks = 0
     for ref in scan_blob_index(str(p)):
-        if ref.kind != "OSMData":
-            continue
-        payload = read_blob(ref)
-        fast = decode_primitive_block_arrow(payload, schema)
-        cols = decode_primitive_block_columns(payload)
-        want = columns_to_batch(cols, schema) if cols["id"] else None
-        assert (fast is None) == (want is None)
-        if fast is not None:
-            assert fast.equals(want)
-        n_blocks += 1
+        if ref.kind == "OSMData":
+            _assert_block_parity(read_blob(ref))
+            n_blocks += 1
     return n_blocks
 
 
@@ -302,24 +297,20 @@ def test_arrow_decode_parity_tiny_fixture(tmp_path):
     assert _assert_arrow_parity(data, tmp_path) >= 1
 
 
-def test_arrow_decode_parity_long_string_fallback(tmp_path):
-    """A >=128-byte tag value forces a multi-byte string-table length —
-    the arrow fast path's walk cannot parse that table and must fall
-    back to the dict path, still producing an identical batch."""
+def test_arrow_decode_parity_long_string(tmp_path):
+    """A >=128-byte tag value gives its string-table entry a multi-byte
+    length, which the one-byte-length table walk cannot take."""
     w = PbfWriter()
     w.add(type="node", id=1, tags={"desc": "x" * 300}, lat="1.0", lon="2.0",
           version=1, visible=True, changeset=5, timestamp_ms=1000, uid=7, user="u")
-    assert _assert_arrow_parity(w.tobytes(), tmp_path) >= 1
+    w.add(type="way", id=2, tags={"note": "é" * 200}, nds=[1],
+          version=1, visible=True, changeset=5, timestamp_ms=1000, uid=7, user="u")
+    assert _assert_arrow_parity(w.tobytes(), tmp_path) >= 2
+    rows = _decode_all(w.tobytes(), tmp_path)
+    assert [dict(r["tags"]) for r in rows] == [{"desc": "x" * 300}, {"note": "é" * 200}]
 
 
 def test_arrow_decode_parity_noncompliant_zero_sid(tmp_path):
-    class SloppyWriter(PbfWriter):
-        def _build_strings(self):
-            table, index = super()._build_strings()
-            idx = dict(index)
-            idx[""] = 0
-            return table, idx
-
     w = SloppyWriter()
     w.add(type="node", id=1, tags={"a": ""}, lat="1.0", lon="2.0",
           version=1, visible=True, changeset=5, timestamp_ms=1000, uid=7, user="u")
@@ -349,16 +340,13 @@ def test_concat_varints_and_segmented_delta(segs):
     """The vectorized way-path core (_concat_varints + _zigzag_np +
     _segmented_delta) must equal the scalar per-buffer decode for any
     segment layout, including empty buffers and empty inputs."""
-    import numpy as np
-
     from osm2orc_spark.sources.pbf_codec import (
         _concat_varints,
-        _packed_svarints_list,
         _segmented_delta,
         _write_varint,
-        _zigzag_decode,
         _zigzag_np,
     )
+    from tests.pbf_reference import _deltas
 
     def enc(vals):
         out = bytearray()
@@ -370,42 +358,199 @@ def test_concat_varints_and_segmented_delta(segs):
     vals, counts = _concat_varints(bufs)
     assert counts.tolist() == [len(s) for s in segs]
     flat = _segmented_delta(_zigzag_np(vals), counts)
-    want = []
-    for b in bufs:
-        want.extend(_packed_svarints_list(b, delta=True))
-    assert flat.tolist() == want
+    assert flat.tolist() == [v for b in bufs for v in _deltas(b)]
 
 
-def test_arrow_decode_parity_unknown_info_field_falls_back(tmp_path):
-    """r7 advice: the arrow path's vectorized Info alternation now bounds
-    accepted field numbers to Info's spec range 1..6 — an extension
-    field (here varint field 7 on a way's Info) must force the dict-path
-    fallback (which ignores unknown fields) instead of risking a silent
-    alternation desync, and the batch stays identical."""
-    from osm2orc_spark.sources.pbf_codec import PbfWriter, _emit_varint
+class ExtInfoWriter(PbfWriter):
+    """Appends an unknown varint field 7 to every Info message."""
 
-    class ExtInfoWriter(PbfWriter):
-        def _encode_info(self, e, index):
-            out = bytearray(super()._encode_info(e, index))
-            _emit_varint(out, 7, 12345)  # unknown Info extension field
-            return bytes(out)
+    def _encode_info(self, e, index):
+        out = bytearray(super()._encode_info(e, index))
+        _emit_varint(out, 7, 12345)
+        return bytes(out)
 
+
+def test_arrow_decode_parity_unknown_info_field(tmp_path):
+    """An Info field number outside 1..6 (here varint field 7 on a way's
+    Info) fails the vectorized alternation check, so that block's Info is
+    walked per entity; the field is skipped and every Info column keeps
+    its value."""
     w = ExtInfoWriter()
     w.add(type="way", id=1, tags={"highway": "residential"}, nds=[1, 2, 3],
           version=2, visible=True, changeset=5, timestamp_ms=1000, uid=7, user="u")
     w.add(type="node", id=1, tags={}, lat="1.0", lon="2.0",
           version=1, visible=True, changeset=5, timestamp_ms=1000, uid=7, user="u")
     assert _assert_arrow_parity(w.tobytes(), tmp_path) >= 1
+    way = [r for r in _decode_all(w.tobytes(), tmp_path) if r["type"] == "way"][0]
+    assert (way["version"], way["changeset"], way["uid"], way["user"]) == (2, 5, 7, "u")
+
+
+# Hand-built blocks for the inputs the writer never emits.  String table:
+# sid 0 "", 1 "a", 2 "1", 3 "2", 4 "b", 5 "u".
+STRINGS = ["", "a", "1", "2", "b", "u"]
+
+
+def _block(*groups: bytes, strings=STRINGS, table: bytes | None = None) -> bytes:
+    if table is None:
+        st = bytearray()
+        for s in strings:
+            _emit_bytes(st, 1, s if isinstance(s, bytes) else s.encode())
+        table = bytes(st)
+    pb = bytearray()
+    _emit_bytes(pb, 1, table)
+    for g in groups:
+        _emit_bytes(pb, 2, g)
+    return bytes(pb)
+
+
+def _message(*fields: tuple) -> bytes:
+    """Message bytes from (fieldno, kind, value) fields: kind 'v' varint,
+    'b' bytes, 'p' packed varints, 'z' packed zigzag varints."""
+    msg = bytearray()
+    for f, kind, v in fields:
+        if kind == "v":
+            _emit_varint(msg, f, v)
+        elif kind == "b":
+            _emit_bytes(msg, f, v)
+        else:
+            _emit_packed(msg, f, v, zigzag=kind == "z")
+    return bytes(msg)
+
+
+def _group(fieldno: int, *fields: tuple) -> bytes:
+    """A PrimitiveGroup holding one message of type ``fieldno``."""
+    return _message((fieldno, "b", _message(*fields)))
+
+
+def _info(*extra: tuple) -> tuple:
+    """An Info field: version 3, timestamp, changeset, uid, user sid 5,
+    visible, then any ``extra`` fields."""
+    return (4, "b", _message((1, "v", 3), (2, "v", 1_600_000_000), (3, "v", 42),
+                             (4, "v", 7), (5, "v", 5), (6, "v", 1), *extra))
+
+
+def _dense(ids: list[int], kv: list[int], *dense_info: tuple) -> bytes:
+    deltas = [b - a for a, b in zip([0] + ids, ids)]
+    fields = [(1, "z", deltas), (8, "z", [10**7] * len(ids)), (9, "z", [2 * 10**7] * len(ids)),
+              (10, "p", kv)]
+    if dense_info:
+        fields.append((5, "b", _message(*dense_info)))
+    return _group(2, *fields)
+
+
+def _way(wid: int, keys: list[int], vals: list[int], *extra: tuple) -> bytes:
+    return _group(3, (1, "v", wid), (2, "p", keys), (3, "p", vals), (8, "z", [5, 1, 1]), *extra)
+
+
+def _plain_node(nid: int, *extra: tuple) -> bytes:
+    return _group(1, (1, "v", (nid << 1) ^ (nid >> 63)), *extra)
+
+
+LONG = "L" * 200
+# name -> (block, expected tags per row in wire order)
+CRAFTED = {
+    "long_string": (
+        _block(_dense([1], [1, 6, 0]), _way(9, [6], [1]), strings=STRINGS + [LONG]),
+        [[("a", LONG)], [(LONG, "a")]],
+    ),
+    "plain_nodes": (
+        _block(
+            _plain_node(-5, (2, "p", [1]), (3, "p", [2]), _info(), (8, "v", 21), (9, "v", 40)),
+            _dense([7], [4, 3, 0]),
+            _plain_node(6),  # no coordinates, no Info
+            _way(8, [], []),
+            _plain_node(1, (8, "v", 3)),  # latitude only
+        ),
+        [[("a", "1")], [("b", "2")], [], [], []],
+    ),
+    "changeset": (
+        # a ChangeSet carries only its id: the other fields are ignored
+        _block(_group(5, (1, "v", 77), (2, "p", [1]), (3, "p", [2]), _info()),
+               _way(1, [1], [2])),
+        [[], [("a", "1")]],
+    ),
+    "zero_sid_value": (
+        _block(_dense([1, 2], [1, 0, 0, 4, 2, 0])),
+        [[("a", "")], [("b", "1")]],
+    ),
+    "missing_terminators": (
+        _block(_dense([1, 2, 3], [1, 2, 0])),
+        [[("a", "1")], [], []],
+    ),
+    "dangling_key": (
+        _block(_dense([1, 2], [1, 2, 4, 0, 4, 3, 0])),
+        [[("a", "1")], [("b", "2")]],
+    ),
+    "duplicate_keys_dense": (
+        _block(_dense([1, 2], [1, 2, 4, 2, 1, 3, 0, 1, 2, 0])),
+        [[("a", "2"), ("b", "1")], [("a", "1")]],
+    ),
+    "duplicate_keys_way": (
+        _block(_way(9, [1, 4, 1], [2, 2, 3]), _way(10, [1], [2])),
+        [[("a", "2"), ("b", "1")], [("a", "1")]],
+    ),
+    "keys_vals_mismatch": (
+        _block(_way(1, [1, 4], [2]), _way(2, [1], [2, 3]), _way(3, [1, 4], [2, 3])),
+        [[("a", "1")], [("a", "1")], [("a", "1"), ("b", "2")]],
+    ),
+    "info_unknown_varint": (
+        _block(_way(1, [1], [2], _info((7, "v", 12345))), _way(2, [4], [3], _info())),
+        [[("a", "1")], [("b", "2")]],
+    ),
+    "info_non_varint": (
+        _block(_way(1, [1], [2], _info((7, "b", b"\x08\x05"), (9, "v", 1)))),
+        [[("a", "1")]],
+    ),
+    "dense_info_empty_field": (
+        _block(_dense([1, 2], [0, 0], (1, "p", [2, 3]), (3, "z", []), (5, "z", [5, 0]))),
+        [[], []],
+    ),
+    "string_table_other_fields": (
+        _block(_dense([1], [1, 2, 0]), table=_message(
+            (1, "b", b""), (2, "v", 99), (1, "b", b"a"), (3, "b", b"junk"), (1, "b", b"1"))),
+        [[("a", "1")]],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(CRAFTED))
+def test_crafted_block_equals_oracle(name):
+    block, tags = CRAFTED[name]
+    rows = _assert_block_parity(block)
+    assert [r["tags"] for r in rows] == tags
+
+
+def test_duplicate_tag_keys_last_value_wins_on_dense_node_and_way():
+    """A tag key repeated within one entity keeps its first position and
+    its last value on dense nodes exactly as on ways (before, a dense
+    node kept both pairs)."""
+    node, way = (decode_primitive_block_arrow(CRAFTED[f"duplicate_keys_{k}"][0]).to_pylist()[0]
+                 for k in ("dense", "way"))
+    assert (node["type"], way["type"]) == ("node", "way")
+    assert node["tags"] == way["tags"] == [("a", "2"), ("b", "1")]
+
+
+def test_plain_nodes_and_changesets_decode_columns():
+    rows = _assert_block_parity(CRAFTED["plain_nodes"][0])
+    assert [(r["type"], r["id"]) for r in rows] == [
+        ("node", -5), ("node", 7), ("node", 6), ("way", 8), ("node", 1)]
+    assert (rows[0]["lat"], rows[0]["lon"]) == (Decimal("-0.0000011"), Decimal("0.000002"))
+    assert (rows[0]["version"], rows[0]["user"], rows[0]["timestamp_ms"]) == (
+        3, "u", 1_600_000_000_000)
+    assert (rows[2]["lat"], rows[2]["version"], rows[2]["user"]) == (None, -1, None)
+    assert (rows[4]["lat"], rows[4]["lon"]) == (Decimal("-0.0000002"), None)
+    cs = _assert_block_parity(CRAFTED["changeset"][0])[0]
+    assert (cs["type"], cs["id"], cs["lat"], cs["lon"]) == ("changeset", 77, 0, 0)
+    assert (cs["version"], cs["changeset"], cs["user"], cs["visible"]) == (-1, None, None, True)
 
 
 # ---------------------------------------------------------------------------
-# Encoding-variant certification (r12 verdict #3): no real planet extract
-# is reachable offline, so the writer now emits the encoding SPACE real
-# producers use — raw (uncompressed) blobs, non-default granularity /
-# lat_lon offsets / date_granularity, plain (non-dense) Node messages —
-# and every variant must decode to the SAME logical rows as the default
-# encoding of the same entities, via BOTH decode routes (dict + Arrow
-# parity).  This is the strongest offline substitute for replaying a
+# Encoding-variant certification: no real planet extract is reachable
+# offline, so the writer emits the encoding SPACE real producers use —
+# raw (uncompressed) blobs, non-default granularity / lat_lon offsets /
+# date_granularity, plain (non-dense) Node messages — and every variant
+# must decode to the SAME logical rows as the default encoding of the
+# same entities, with the production decode equal to the reference.  This is the strongest offline substitute for replaying a
 # real region file: the decoder is pinned across the whole variant
 # matrix, not just the one encoding our fixtures happen to produce.
 # ---------------------------------------------------------------------------
@@ -512,16 +657,8 @@ def test_encoding_variants_decode_identically(tmp_path_factory, nodes, ways, rel
             w.add(type="relation", **e)
         data = w.tobytes(nodes_per_block=7)
         d = tmp_path_factory.mktemp(tag)
-        decoded = _decode_all(data, d)
-        # both decode routes agree on every variant
         _assert_arrow_parity(data, d)
-        return sorted(
-            (
-                {k: v for k, v in r.items()}
-                for r in decoded
-            ),
-            key=lambda r: (r["type"], r["id"]),
-        )
+        return sorted(_decode_all(data, d), key=lambda r: (r["type"], r["id"]))
 
     base = rows({}, "base")
     for i, variant in enumerate(ENCODING_VARIANTS):
@@ -534,7 +671,7 @@ def test_variant_grid_fields_actually_emitted(tmp_path):
     (fields 17-20 in the PrimitiveBlock, raw Blob field 1 instead of
     2+3, plain Node group field 1 instead of DenseNodes field 2) — not
     merely 'bytes differ', which any one knob could satisfy while
-    another silently stopped being emitted (r13 review)."""
+    another silently stopped being emitted."""
     from osm2orc_spark.sources.pbf_codec import _fields, iter_blobs_from_bytes
 
     ents = dict(
@@ -599,18 +736,7 @@ def test_variant_grid_fields_actually_emitted(tmp_path):
     assert blob_body_fields(b_var) == {1}
     assert blob_body_fields(b_def) == {2, 3}
     # and decode equality of the row despite all wire differences
-    p1, p2 = tmp_path / "a.pbf", tmp_path / "b.pbf"
-    p1.write_bytes(b_def)
-    p2.write_bytes(b_var)
-
-    def decode(p):
-        out = []
-        for ref in scan_blob_index(str(p)):
-            if ref.kind == "OSMData":
-                out.extend(decode_primitive_block(read_blob(ref)))
-        return out
-
-    assert decode(p1) == decode(p2)
+    assert _decode_all(b_def, tmp_path) == _decode_all(b_var, tmp_path)
 
 
 # ---------------------------------------------------------------------------
@@ -640,16 +766,15 @@ def test_changeset_entities_roundtrip(tmp_path_factory, nodes, cs_ids):
     assert set(got) == set(cs_ids)
     for d in got.values():
         assert float(d["lat"]) == 0.0 and float(d["lon"]) == 0.0  # zeroed
-        assert d["tags"] == {} and d["nds"] == [] and d["members"] == []
+        assert d["tags"] == [] and d["nds"] == [] and d["members"] == []
         assert d["visible"] is True
         assert d["uid"] is None and d["user"] is None
     assert len(decoded) == len(nodes) + len(cs_ids)
-    # both decode routes agree (Arrow fast path falls back internally)
     _assert_arrow_parity(data, tmp_path_factory.mktemp("csent_parity"))
 
 
 # ---------------------------------------------------------------------------
-# Hostile-input matrix (r13): structural corruption must be a LOUD
+# Hostile-input matrix: structural corruption must be a LOUD
 # located ValueError, never a silently-empty or silently-partial scan —
 # at planet scale a quiet drop of trailing blobs is unrecoverable data
 # loss.  Spec hard limits enforced: BlobHeader < 64 KiB, Blob < 32 MiB
@@ -659,9 +784,7 @@ def test_corrupt_inputs_raise_loudly(tmp_path):
     import struct
     import zlib as _zlib
 
-    import pytest
-
-    from osm2orc_spark.sources.pbf_codec import iter_blobs_from_bytes, read_blob
+    from osm2orc_spark.sources.pbf_codec import iter_blobs_from_bytes
 
     w = PbfWriter()
     for i in range(1, 40):
@@ -675,7 +798,7 @@ def test_corrupt_inputs_raise_loudly(tmp_path):
         refs = list(scan_blob_index(str(p)))
         for r in refs:
             if r.kind == "OSMData":
-                decode_primitive_block(read_blob(r))
+                decode_primitive_block_arrow(read_blob(r))
         return refs
 
     # intact file and its in-memory twin both scan clean
@@ -696,6 +819,24 @@ def test_corrupt_inputs_raise_loudly(tmp_path):
             scan_all(blob)
         with pytest.raises(ValueError, match="truncated|outside|BlobHeader"):
             list(iter_blobs_from_bytes(blob))
+
+    # a string table that is not valid UTF-8 or ends inside an entry
+    # fails the decode itself, on both table walks
+    def pbf_of(block: bytes) -> bytes:
+        out = bytearray()
+        w._blob("OSMHeader", b"", out)
+        w._blob("OSMData", block, out)
+        return bytes(out)
+
+    bad_tables = {
+        "invalid UTF-8": _block(_dense([1], [1, 2, 0]), strings=["", b"\xff\xfe", "1"]),
+        "invalid UTF-8, long strings": _block(
+            _dense([1], [1, 2, 0]), strings=["", b"\xc3", "L" * 200]),
+        "truncated entry": _block(table=_message((1, "b", b"")) + b"\x0a\x05ab"),
+    }
+    for name, block in bad_tables.items():
+        with pytest.raises(ValueError, match="utf-8|truncated string table"):
+            scan_all(pbf_of(block))
 
     # corrupt zlib payload: loud too (zlib.error from the decompressor)
     flipped = bytearray(data)

@@ -24,7 +24,6 @@ UNROUTED = {
     "SWITCHED_QUERIES": "test reference: the switch-registry sweep checks it",
     "_ann_ivf_probe_expr": "test reference: the vectorized IVF probe is compared with it",
     "compact": "README library API: ORC compaction",
-    "decode_primitive_block": "test reference: the Arrow PBF decode is compared with it",
     "decode_wav": "test reference: WAV header decode is pinned by test_multimodal_real",
     "dedup_events_stream": "README library API: watermarked stream dedup",
     "index_cache_clear": "test hook: drops the memoized ANN indexes",
