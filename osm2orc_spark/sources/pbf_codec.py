@@ -127,8 +127,8 @@ def _packed_varints_np_offsets(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
     64-bit wraparound matches two's-complement varint semantics (a
     10-byte varint's top bits drop)."""
     a = np.frombuffer(buf, dtype=np.uint8)
-    if a.size == 0:
-        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
+    if a.size == 0 or a.max() < 0x80:  # every varint is a single byte
+        return a.astype(np.uint64), np.arange(a.size, dtype=np.int64)
     starts = np.empty(a.size, dtype=bool)
     starts[0] = True
     np.less(a[:-1], 0x80, out=starts[1:])  # byte after a non-continuation byte
@@ -618,24 +618,31 @@ class _Block:
     def tag_map(self, counts: np.ndarray, keys: np.ndarray, vals: np.ndarray):
         """Tag maps from per-entity pair counts and flat key / value sids.
         A key repeated within one entity keeps its first position and its
-        last value: one sort of (entity, key) codes finds duplicates, and
-        only a block that has one pays for the regrouping."""
+        last value.  Only entities with two or more pairs can repeat a
+        key: one sort of their (entity, key) codes finds duplicates, and
+        only a block that has one pays for the masking."""
         import pyarrow as pa
 
         if keys.size:
             top = int(keys.max())
             if top >= self.n_strings:  # also keeps the codes below collision-free
                 raise IndexError(f"tag key sid {top} outside the string table")
-            seg = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-            code = (seg << 32) | keys.astype(np.int64)
+            multi = np.flatnonzero(counts > 1)
+            seg = np.repeat(multi, counts[multi])
+            first_pair = np.cumsum(counts) - counts
+            pair = np.repeat(first_pair[multi], counts[multi]) + _pos_in_segment(counts[multi])
+            code = (seg << 32) | keys[pair].astype(np.int64)
             if (np.diff(np.sort(code)) == 0).any():
                 order = np.argsort(code, kind="stable")
-                new = np.diff(code[order]) != 0
-                first = order[np.concatenate(([True], new))]
-                last = order[np.concatenate((new, [True]))]
-                by_pos = np.argsort(first)
-                keys, vals = keys[first[by_pos]], vals[last[by_pos]]
-                counts = np.bincount(seg[first[by_pos]], minlength=len(counts))
+                code, pair = code[order], pair[order]
+                head = np.concatenate(([True], np.diff(code) != 0))
+                tail = np.concatenate((head[1:], [True]))
+                vals = vals.copy()
+                vals[pair[head]] = vals[pair[tail]]
+                keep = np.ones(keys.size, dtype=bool)
+                keep[pair[~head]] = False
+                keys, vals = keys[keep], vals[keep]
+                counts = counts - np.bincount(code[~head] >> 32, minlength=len(counts))
         return pa.MapArray.from_arrays(
             _offsets(counts), self.take(keys), self.take(vals)
         )
@@ -658,31 +665,46 @@ def _empty_list_array(n: int, list_type):
     )
 
 
-def _dense_tags_sequential(kv: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """(pairs per node, key positions) of a keys_vals stream read pair by
-    pair, where only a 0 in key position ends a node: the split for a
-    stream that uses sid 0 as a value (or lacks terminators)."""
-    kvl = kv.tolist()
-    counts = np.zeros(n, dtype=np.int64)
-    key_pos: list[int] = []
-    pos, end = 0, len(kvl)
-    for i in range(n):
-        first = len(key_pos)
-        while pos < end and kvl[pos] != 0:
-            key_pos.append(pos)
-            pos += 2
-        counts[i] = len(key_pos) - first
-        pos += 1
-    return counts, np.asarray(key_pos, dtype=np.int64)
+def _dense_tag_pairs(kv: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """DenseNodes keys_vals -> (pairs per node, key sids, value sids).
+
+    With exactly one 0 per node, sid 0 is never a value: the stream
+    splits on its zeros, vectorized, and a dangling key (an odd segment)
+    is dropped the way zip drops it.  Any other stream uses sid 0 as a
+    value (or lacks terminators), and is read pair by pair, where only a
+    0 in key position ends a node."""
+    if not kv.any():
+        empty = np.empty(0, dtype=np.uint64)
+        return np.zeros(n, dtype=np.int64), empty, empty
+    zpos = np.flatnonzero(kv == 0)
+    if len(zpos) == n:
+        seg_lens = np.diff(zpos, prepend=-1) - 1
+        counts = seg_lens // 2
+        if not (seg_lens % 2).any():
+            pairs = kv[: zpos[-1]]
+            pairs = pairs[pairs != 0]
+            return counts, pairs[0::2], pairs[1::2]
+        key_pos = np.repeat(zpos - seg_lens, counts) + 2 * _pos_in_segment(counts)
+    else:
+        kvl = kv.tolist()
+        counts = np.zeros(n, dtype=np.int64)
+        positions: list[int] = []
+        pos, end = 0, len(kvl)
+        for i in range(n):
+            first = len(positions)
+            while pos < end and kvl[pos] != 0:
+                positions.append(pos)
+                pos += 2
+            counts[i] = len(positions) - first
+            pos += 1
+        key_pos = np.asarray(positions, dtype=np.int64)
+    return counts, kv[key_pos], kv[key_pos + 1]
 
 
 def _emit_dense_arrow(block: _Block, gbuf: bytes) -> None:
-    """DenseNodes -> one set of column arrays, zero per-entity Python.
-
-    Tags: the 0 terminators of keys_vals give the per-node pair counts
-    (map offsets) and the key positions; with exactly one 0 per node, sid
-    0 is never a value and the split is vectorized, dropping a dangling
-    key.  Two `take` gathers then build the map children."""
+    """DenseNodes -> one set of column arrays, zero per-entity Python:
+    packed fields decode as whole arrays, and tag maps and users are
+    `take` gathers on the string table."""
     import pyarrow as pa
 
     fld = {f: bytes(v) for f, wire, v in _fields(gbuf) if wire == 2}
@@ -693,18 +715,8 @@ def _emit_dense_arrow(block: _Block, gbuf: bytes) -> None:
     # an empty packed DenseInfo field counts as absent
     info = {f: bytes(v) for f, wire, v in _fields(fld.get(5, b"")) if wire == 2 and v}
 
-    kv = _packed_varints_np(fld.get(10, b""))
-    if not kv.any():
-        counts, key_pos = np.zeros(n, dtype=np.int64), np.empty(0, dtype=np.int64)
-    else:
-        zpos = np.flatnonzero(kv == 0)
-        if len(zpos) == n:
-            seg_lens = np.diff(zpos, prepend=-1) - 1
-            counts = seg_lens // 2
-            key_pos = np.repeat(zpos - seg_lens, counts) + 2 * _pos_in_segment(counts)
-        else:
-            counts, key_pos = _dense_tags_sequential(kv, n)
-    block.emit("tags", block.tag_map(counts, kv[key_pos], kv[key_pos + 1]))
+    counts, keys, vals = _dense_tag_pairs(_packed_varints_np(fld.get(10, b"")), n)
+    block.emit("tags", block.tag_map(counts, keys, vals))
 
     lats = _packed_deltas_np(fld.get(8, b""))
     lons = _packed_deltas_np(fld.get(9, b""))

@@ -520,6 +520,27 @@ def test_crafted_block_equals_oracle(name):
     assert [r["tags"] for r in rows] == tags
 
 
+@settings(max_examples=150, deadline=None)
+@given(
+    nodes=st.lists(
+        st.tuples(st.lists(st.tuples(st.integers(1, 4), st.integers(1, 5)), max_size=6),
+                  st.none() | st.integers(1, 4)),
+        min_size=1, max_size=8),
+    ways=st.lists(st.tuples(st.lists(st.integers(1, 4), max_size=6),
+                            st.lists(st.integers(1, 5), max_size=6)), max_size=5),
+)
+def test_tag_maps_equal_oracle(nodes, ways):
+    """Small sid alphabets make repeated keys common: dense nodes (with
+    an optional dangling key) and ways (keys and vals of any lengths)
+    decode to the reference's tag maps."""
+    kv = []
+    for pairs, dangling in nodes:
+        kv += [sid for pair in pairs for sid in pair] + ([dangling] if dangling else []) + [0]
+    groups = [_dense(list(range(1, len(nodes) + 1)), kv)]
+    groups += [_way(i, keys, vals) for i, (keys, vals) in enumerate(ways)]
+    _assert_block_parity(_block(*groups))
+
+
 def test_duplicate_tag_keys_last_value_wins_on_dense_node_and_way():
     """A tag key repeated within one entity keeps its first position and
     its last value on dense nodes exactly as on ways (before, a dense
