@@ -434,7 +434,7 @@ def _nano_np_to_decimal128(nano: np.ndarray, valid: np.ndarray | None = None):
         None if valid is None else pa.py_buffer(np.packbits(valid, bitorder="little"))
     )
     return pa.Array.from_buffers(
-        pa.decimal128(38, 9), n, [validity, pa.py_buffer(words.tobytes())]
+        pa.decimal128(38, 9), n, [validity, pa.py_buffer(words)]
     )
 
 
@@ -504,7 +504,7 @@ def _decode_string_table_arrow(buf: bytes):
     offs[1::2] = begin
     offs[2::2] = end
     return pa.StringArray.from_buffers(
-        2 * m, pa.py_buffer(offs.tobytes()), pa.py_buffer(buf)
+        2 * m, pa.py_buffer(offs), pa.py_buffer(buf)
     )
 
 
@@ -879,6 +879,7 @@ def _emit_messages_arrow(block: _Block, messages: list) -> None:
     # coordinates exist only on plain nodes and changesets
     coord_rows: list[int] = []
     coords: list[tuple] = []  # (lat nano, lat present, lon nano, lon present)
+    grain, lat0, lon0 = block.granularity, block.lat_offset, block.lon_offset
 
     for i, (kind, gbuf) in enumerate(messages):
         eid = lat = lon = None
@@ -927,14 +928,10 @@ def _emit_messages_arrow(block: _Block, messages: list) -> None:
         if kind == 1:  # Node ids and coordinates are zigzag sint64
             eid = None if eid is None else _zigzag_decode(eid)
             coord_rows.append(i)
-            coords.append(
-                (
-                    0 if lat is None else block.lat_offset + block.granularity * _zigzag_decode(lat),
-                    lat is not None,
-                    0 if lon is None else block.lon_offset + block.granularity * _zigzag_decode(lon),
-                    lon is not None,
-                )
-            )
+            coords.append((
+                0 if lat is None else lat0 + grain * _zigzag_decode(lat), lat is not None,
+                0 if lon is None else lon0 + grain * _zigzag_decode(lon), lon is not None,
+            ))
         elif kind == 5:
             coord_rows.append(i)
             coords.append((0, True, 0, True))
