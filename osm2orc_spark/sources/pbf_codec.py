@@ -116,7 +116,6 @@ def _skip_field(buf: bytes, pos: int, wire: int) -> int:
     raise ValueError(f"unsupported wire type {wire}")
 
 
-
 def _packed_varints_np_offsets(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized packed-varint decode -> (uint64 values, int64 byte
     positions of each varint's first byte).
@@ -592,9 +591,6 @@ class _Block:
         self.chunks: dict[str, list] = {f.name: [] for f in schema}
 
     def emit(self, name: str, arr) -> None:
-        f = self.schema.field(name)
-        if arr.type != f.type:
-            arr = arr.cast(f.type)
         self.chunks[name].append(arr)
 
     def take(self, sids: np.ndarray, present: np.ndarray | None = None):
@@ -761,7 +757,7 @@ def _concat_varints(bufs: list) -> tuple[np.ndarray, np.ndarray]:
     positions of the concatenated stream."""
     concat = b"".join(bufs)
     vals, start_idx = _packed_varints_np_offsets(concat)
-    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
     byte_offs = np.zeros(len(bufs) + 1, dtype=np.int64)
     np.cumsum(lens, out=byte_offs[1:])
     counts = np.diff(np.searchsorted(start_idx, byte_offs))
