@@ -144,7 +144,8 @@ def decode_block(data: bytes) -> list[dict]:
     grid = {17: 100, 18: 1000, 19: 0, 20: 0}  # granularity, date_granularity, offsets
     for f, wire, v in _fields(data):
         if f == 1 and wire == 2:
-            strings = [bytes(s).decode("utf-8") for f2, w2, s in _fields(bytes(v)) if (f2, w2) == (1, 2)]
+            strings = [bytes(s).decode("utf-8")
+                       for f2, w2, s in _fields(bytes(v)) if (f2, w2) == (1, 2)]
         elif f == 2 and wire == 2:
             groups.append(bytes(v))
         elif f in grid and wire == 0:

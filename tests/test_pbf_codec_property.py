@@ -571,9 +571,10 @@ def test_plain_nodes_and_changesets_decode_columns():
 # raw (uncompressed) blobs, non-default granularity / lat_lon offsets /
 # date_granularity, plain (non-dense) Node messages — and every variant
 # must decode to the SAME logical rows as the default encoding of the
-# same entities, with the production decode equal to the reference.  This is the strongest offline substitute for replaying a
-# real region file: the decoder is pinned across the whole variant
-# matrix, not just the one encoding our fixtures happen to produce.
+# same entities, with the production decode equal to the reference.
+# This is the strongest offline substitute for replaying a real region
+# file: the decoder is pinned across the whole variant matrix, not just
+# the one encoding our fixtures happen to produce.
 # ---------------------------------------------------------------------------
 ENCODING_VARIANTS = [
     {"compression": "raw"},
