@@ -543,8 +543,7 @@ def test_tag_maps_equal_oracle(nodes, ways):
 
 def test_duplicate_tag_keys_last_value_wins_on_dense_node_and_way():
     """A tag key repeated within one entity keeps its first position and
-    its last value on dense nodes exactly as on ways (before, a dense
-    node kept both pairs)."""
+    its last value on dense nodes exactly as on ways."""
     node, way = (decode_primitive_block_arrow(CRAFTED[f"duplicate_keys_{k}"][0]).to_pylist()[0]
                  for k in ("dense", "way"))
     assert (node["type"], way["type"]) == ("node", "way")
